@@ -53,7 +53,7 @@ object ProfileStream {
       val state = graft.etl.Scratch.retainedDir("prof-state")
       val ckpt = graft.etl.Scratch.retainedDir("prof-ckpt")
       val all = time("read+normalize events") {
-        graft.etl.Tables.normalizeEventTime(s.read.parquet(eventsParquet))
+        graft.etl.Tables.parquetFile(s, eventsParquet)
       }
       val cut = time("median cut agg") {
         all.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
@@ -73,7 +73,7 @@ object ProfileStream {
               "event_type", Seq("value"), cdc, nBuckets = 8)
           }
           val dim = time(s"  b$id dim derive") {
-            graft.etl.Tables.normalizeEventTime(sp.read.parquet(eventsParquet))
+            graft.etl.Tables.parquetFile(sp, eventsParquet)
               .groupBy(col("user_id").as("u"))
               .agg(max(col("value")).as("u_max"))
           }

@@ -36,7 +36,7 @@ object ProfileStreamStart {
     // stage a small input once (500 rows) — the start cost under test
     // is per-QUERY, not per-row
     val stage = graft.etl.Scratch.pinnedDir("pss-stage")
-    graft.etl.Tables.normalizeEventTime(spark.read.parquet(eventsParquet))
+    graft.etl.Tables.parquetFile(spark, eventsParquet)
       .limit(500).coalesce(1).write.mode("overwrite").parquet(stage)
 
     def runOnce(s: SparkSession, ckpt: String,

@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** Data-layout levers for scan pruning at 100 TB.
@@ -148,7 +149,7 @@ object Layout {
       .toOption.flatMap {
         case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
           Option(v).map {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+            case u: UTF8String => u.toString
             case other => other
           }
         case _ => None
@@ -156,9 +157,10 @@ object Layout {
 
   /** Total order for driver-side zone-map overlap tests, mirroring
     * Spark's comparison on the manifest column type: exact integral
-    * compare, BigDecimal across mixed numeric widths, lexicographic
-    * for strings; anything else throws (the caller's Try falls back
-    * to the Spark read). */
+    * compare, BigDecimal across mixed numeric widths, UTF-8 byte order
+    * for strings (UTF-16 `String.compareTo` puts supplementary-plane
+    * characters before U+E000–U+FFFF, Spark puts them after); anything
+    * else throws (the caller's Try falls back to the Spark read). */
   private def cmpStat(a: Any, b: Any): Int = (a, b) match {
     case (x: java.lang.Number, y: java.lang.Number) => (x, y) match {
       case _ if x.isInstanceOf[java.lang.Float] ||
@@ -168,7 +170,8 @@ object Layout {
         java.lang.Double.compare(x.doubleValue(), y.doubleValue())
       case _ => java.lang.Long.compare(x.longValue(), y.longValue())
     }
-    case (x: String, y: String) => x.compareTo(y)
+    case (x: String, y: String) =>
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
     case _ => sys.error(s"incomparable manifest stat pair ($a, $b)")
   }
 

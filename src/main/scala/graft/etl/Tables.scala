@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table access with schema normalization.
   *
@@ -23,12 +23,75 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   *     pinned-UTC session this is exactly the naive-as-UTC reading DuckDB
   *     applies to the same file.
   *   - `timestamp[us]` adjusted to UTC: already TimestampType; untouched.
+  *
+  * Every source read goes through [[parquetFile]], which infers a
+  * single-file source's schema once per file version. Spark's own
+  * inference runs a one-task job that reads a footer; a gate that reads
+  * the same unchanged file again reuses the schema that job found, the
+  * way a table format keeps the schema in its metadata instead of
+  * re-deriving it from the data files.
   */
 object Tables {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquetFile(spark, s"$dir/$name.parquet")
+
+  /** The parquet source at `path` (a file or a directory), event time
+    * normalized. */
+  def parquetFile(spark: SparkSession, path: String): DataFrame =
+    normalizeEventTime(readRaw(spark, path))
+
+  /** The raw schema [[parquetFile]] reads `path` with, before event-time
+    * normalization — what a stream over the same files must declare. */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    readRaw(spark, path).schema
+
+  /** The session confs that change what Spark infers from a footer. */
+  private val SchemaConfPrefixes =
+    Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.")
+  private val CaseSensitive = "spark.sql.caseSensitive"
+
+  /** One version of one file under one inference-relevant conf. */
+  private case class FileVersion(path: String, length: Long,
+    modified: Long, confs: Map[String, String])
+
+  private val MaxSchemas = 256
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[FileVersion, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[FileVersion, StructType]): Boolean =
+        size() > MaxSchemas
+    })
+
+  /** A plain file reads with the schema Spark inferred for the same file
+    * version; a directory, a missing path, a cache miss, a rewritten file
+    * or a changed conf infers as Spark does. */
+  private def readRaw(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTime(spark.read.parquet(s"$dir/$name.parquet"))
+    fileVersion(spark, path) match {
+      case Some(v) =>
+        Option(schemas.get(v)) match {
+          case Some(s) => spark.read.schema(s).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(v, df.schema)
+            df
+        }
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  private def fileVersion(spark: SparkSession,
+      path: String): Option[FileVersion] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)).toOption.filter(_.isFile).map { st =>
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k == CaseSensitive || SchemaConfPrefixes.exists(k.startsWith)
+      }
+      FileVersion(st.getPath.toString, st.getLen, st.getModificationTime,
+        confs)
+    }
   }
 
   /** Canonical event-time normalization: rewrite `ts` (when present) from

@@ -97,7 +97,7 @@ object CorpusIngest {
     WarmRuns.get[Warm](warmKey)(w =>
         Seq(w.stage, w.corpus, w.index, w.ckpt)) match {
       case Some(w) =>
-        val schema = w.s.read.parquet(documentsParquet)
+        val schema = graft.etl.Tables.parquetFile(w.s, documentsParquet)
           .select(col(idCol), col(textCol)).schema
         runOnce(w.s, w.stage, w.corpus, w.index, w.ckpt, schema)
         w.s.read.parquet(w.corpus).select(col(idCol))
@@ -108,7 +108,7 @@ object CorpusIngest {
         val corpus = Scratch.retainedDir("ingest-corpus")
         val index = Scratch.retainedDir("ingest-index")
         val ckpt = Scratch.retainedDir("ingest-ckpt")
-        val docs = s.read.parquet(documentsParquet)
+        val docs = graft.etl.Tables.parquetFile(s, documentsParquet)
           .select(col(idCol), col(textCol))
         docs.where(col(idCol) % 2 === 0)
           .write.mode("overwrite").parquet(stage)

@@ -27,7 +27,8 @@ object EventStream {
     * The stream schema is NOT pinned: the driver's testdata has shipped
     * `ts` as nanos-long, TIMESTAMP_NTZ, and TIMESTAMP across
     * generations, so we take the raw schema from the files themselves
-    * (one driver-side batch footer read) and apply the same canonical
+    * (`Tables.parquetSchema`: a footer read, once per file version for
+    * a single file) and apply the same canonical
     * normalization as `graft.etl.Tables` — downstream operators always
     * see a session-zoned TimestampType `ts`, which watermarks accept
     * (TIMESTAMP_NTZ event time is rejected by Structured Streaming). */
@@ -45,8 +46,7 @@ object EventStream {
         val glob = name.dropRight(1) + "[" + name.last + "]"
         (p.getParent.resolve(glob).toString, p.getParent.toString)
       } else (path, path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(path).schema
+    val rawSchema = graft.etl.Tables.parquetSchema(spark, path)
     graft.etl.Tables.normalizeEventTime(
       spark.readStream.schema(rawSchema).option("basePath", base)
         .parquet(streamPath))

@@ -275,8 +275,8 @@ object StreamAsBatch {
     val (s, statePath) = maintainedRestarted(spark, eventsParquet,
       s"maintJoin|$eventsParquet", "mjoin") { (batch, id, state) =>
       if (!new java.io.File(s"$state/B").exists()) {
-        val dim = graft.etl.Tables.normalizeEventTime(
-            batch.sparkSession.read.parquet(eventsParquet))
+        val dim = graft.etl.Tables.parquetFile(batch.sparkSession,
+            eventsParquet)
           .groupBy(col("user_id").as("u"))
           .agg(max(col("value")).as("u_max"))
         graft.etl.MaterializedJoin.createSide(dim, Seq("u"), state,
@@ -326,8 +326,7 @@ object StreamAsBatch {
         // two are independent given the checkpoint, so they overlap
         val st = graft.etl.MaterializedCdc.createForCompose(batch,
           keyCol, orderCols, "event_type", Seq("value"), nBuckets = 8)
-        val dim = graft.etl.Tables.normalizeEventTime(
-            sp.read.parquet(eventsParquet))
+        val dim = graft.etl.Tables.parquetFile(sp, eventsParquet)
           .groupBy(col("user_id").as("u"))
           .agg(max(col("value")).as("u_max"))
         graft.etl.Par.run(
@@ -381,8 +380,7 @@ object StreamAsBatch {
         if (prev != null && new java.io.File(prev._1).isDirectory &&
             new java.io.File(prev._2).isDirectory) prev
         else {
-          val all = graft.etl.Tables.normalizeEventTime(
-            s.read.parquet(eventsParquet))
+          val all = graft.etl.Tables.parquetFile(s, eventsParquet)
           val cut = all.agg(expr("percentile_approx(unix_micros(ts), 0.5)"))
             .head().getLong(0)
           val h1 = graft.etl.Scratch.pinnedDir("halves-1")
@@ -440,7 +438,6 @@ object StreamAsBatch {
       case None =>
         val s = StreamTuning.tune(spark.newSession())
         s.conf.set("spark.sql.shuffle.partitions", "4")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val stage = graft.etl.Scratch.retainedDir(s"$prefix-stage")
         val ckpt = graft.etl.Scratch.retainedDir(s"$prefix-ckpt")
         val state = graft.etl.Scratch.retainedDir(s"$prefix-state")
@@ -491,7 +488,6 @@ object StreamAsBatch {
           sys.props.getOrElse("graft.stream.parts", "4"))
         sys.props.get("graft.stream.provider").foreach(p =>
           s.conf.set("spark.sql.streaming.stateStore.providerClass", p))
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         // gates whose OUTPUT does not depend on the watermark closing
         // anything (dedup emits on arrival, inner join on match) skip
         // the trailing no-data micro-batch - one state-commit cycle

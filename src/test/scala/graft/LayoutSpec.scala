@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.etl.Layout
+import org.apache.spark.unsafe.types.UTF8String
 
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -300,6 +301,39 @@ class LayoutSpec extends SparkSpec {
     assert(nonLit == Layout.readZonePruned(spark, dir, lit(4000L), lit(8200L))
       .where(col("k").between(4000L, 8200L)).count())
     graft.etl.Scratch.remove(dir)
+
+    // (d) string keys: in Spark's UTF-8 byte order U+E000–U+FFFF sort
+    // before supplementary-plane characters such as U+1F600, in UTF-16
+    // order after them — the driver-side probe must follow Spark's order
+    val sdir = graft.etl.Scratch.dir("zmdriverstr")
+    val prefixes = Seq("\uE000", "\uFFEE", "\uD83D\uDE00", "\uD83D\uDE00\uE000")
+    val skeys = for (p <- prefixes; i <- 1 to 500) yield f"$p$i%04d"
+    Layout.writeZoneMapped(skeys.map(k => (k, k.length)).toDF("k", "n"),
+      sdir, "k", numFiles = 8)
+    def filesVia(lo: String, hi: String): (Seq[String], Seq[String]) = {
+      val driver = Layout.readZonePruned(spark, sdir, lit(lo), lit(hi))
+        .select(input_file_name()).distinct().collect()
+        .map(r => new java.net.URI(r.getString(0)).getPath).sorted.toSeq
+      val filtered = spark.read.parquet(s"$sdir/_zonemap")
+        .where(col("max_v") >= lit(lo) && col("min_v") <= lit(hi))
+        .select("file").collect()
+        .map(r => new java.net.URI(r.getString(0)).getPath).sorted.toSeq
+      (driver, filtered)
+    }
+    for ((lo, hi) <- Seq(
+        ("\uE0000250", "\uD83D\uDE000250"),
+        ("\uFFEE0100", "\uD83D\uDE00\uE0000100"),
+        ("\uD83D\uDE000001", "\uD83D\uDE000500"),
+        ("\uE0000001", "\uFFEE0400"))) {
+      val (driver, filtered) = filesVia(lo, hi)
+      assert(filtered.nonEmpty && driver == filtered,
+        s"[$lo, $hi]: driver $driver vs Spark $filtered")
+      def utf8(x: String) = UTF8String.fromString(x)
+      assert(Layout.readZonePruned(spark, sdir, lit(lo), lit(hi))
+        .where(col("k").between(lo, hi)).count() == skeys.count(k =>
+          utf8(k).compareTo(utf8(lo)) >= 0 && utf8(k).compareTo(utf8(hi)) <= 0))
+    }
+    graft.etl.Scratch.remove(sdir)
   }
 
   test("membership sketch: point probes open few files, never lose rows") {

@@ -46,6 +46,133 @@ class TablesSpec extends SparkSpec {
     assert(back.toSeq == micros.sorted)
   }
 
+  /** `df` written as ONE plain parquet file at `path` (the testdata
+    * layout), replacing whatever file was there. */
+  private def writeSingleFile(df: org.apache.spark.sql.DataFrame,
+      path: String): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("tables-single")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = tmp.toFile.listFiles().find(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** `body`'s result and the number of Spark jobs it ran. Listener
+    * events arrive in order, so once a sentinel job submitted after
+    * `body` has been seen, every job of `body` has been counted. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val (group, sentinel) = (s"tables-spec-$id", s"tables-sentinel-$id")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(sentinel), "listener never saw the sentinel job")
+      (r, groups.toArray.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a repeated read of an unchanged single-file source runs no Spark job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-once").toString
+    writeSingleFile((1L to 100L).map(i => (i, s"s$i", i * 0.5))
+      .toDF("id", "s", "v"), s"$dir/t.parquet")
+    val (first, firstJobs) = withJobCount(graft.etl.Tables.table(spark, dir, "t"))
+    assert(firstJobs >= 1, "the first read infers the schema with a job")
+    val (second, secondJobs) =
+      withJobCount(graft.etl.Tables.table(spark, dir, "t"))
+    assert(secondJobs == 0, s"second read ran $secondJobs job(s)")
+    val inferred = spark.read.parquet(s"$dir/t.parquet").schema
+    assert(first.schema == inferred && second.schema == inferred)
+    assert(second.orderBy("id").collect().toSeq ==
+      spark.read.parquet(s"$dir/t.parquet").orderBy("id").collect().toSeq)
+  }
+
+  test("a rewritten single-file source is read with its new schema") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-rewrite").toString
+    val path = s"$dir/t.parquet"
+    writeSingleFile((1L to 10L).map(i => (i, i * 2L)).toDF("id", "v"), path)
+    assert(graft.etl.Tables.table(spark, dir, "t").columns.toSeq == Seq("id", "v"))
+    writeSingleFile((1L to 10L).map(i => (i, i * 2L, s"e$i"))
+      .toDF("id", "v", "extra"), path)
+    val after = graft.etl.Tables.table(spark, dir, "t")
+    assert(after.columns.toSeq == Seq("id", "v", "extra"))
+    assert(after.where(col("id") === 3L).select("extra").as[String]
+      .collect().toSeq == Seq("e3"))
+  }
+
+  test("the cached schema follows spark.sql.parquet.binaryAsString") {
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    // a non-Spark writer: a plain BINARY column with no string
+    // annotation and no Spark schema in the footer, so the inferred
+    // type depends on binaryAsString
+    val dir = java.nio.file.Files.createTempDirectory("tables-binary").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int64 id; required binary b; }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/t.parquet"),
+        spark.sparkContext.hadoopConfiguration))
+      .withType(schema).build()
+    try for (i <- 1 to 3) {
+      val g = new SimpleGroup(schema)
+      g.add("id", i.toLong)
+      g.add("b", s"b$i")
+      w.write(g)
+    } finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val prior = spark.conf.getOption(key)
+    def bType = graft.etl.Tables.table(spark, dir, "t").schema("b").dataType
+    try {
+      spark.conf.set(key, "false")
+      assert(bType == BinaryType)
+      spark.conf.set(key, "true")
+      assert(bType == StringType)
+      assert(graft.etl.Tables.table(spark, dir, "t").orderBy("id")
+        .select("b").collect().map(_.getString(0)).toSeq == Seq("b1", "b2", "b3"))
+      spark.conf.set(key, "false")
+      assert(bType == BinaryType)
+      spark.conf.unset(key)
+      assert(bType == spark.read.parquet(s"$dir/t.parquet").schema("b").dataType)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("a directory source is inferred on every read and sees new files") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-dir").toString
+    (1L to 50L).toDF("id").write.parquet(s"$dir/t.parquet")
+    val first = graft.etl.Tables.table(spark, dir, "t")
+    assert(first.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+    assert(first.count() == 50)
+    (51L to 80L).map(i => (i, s"n$i")).toDF("id", "note")
+      .write.mode("append").parquet(s"$dir/t.parquet")
+    val (second, jobs) = withJobCount(graft.etl.Tables.table(spark, dir, "t"))
+    assert(jobs >= 1, "a directory source keeps Spark's inference")
+    assert(second.count() == 80 &&
+      second.agg(sum("id")).as[Long].head() == 80L * 81 / 2)
+  }
+
   test("TRIPWIRE: driver testdata physical shape matches what graft normalizes for") {
     // Round 6 lost six queries SILENTLY when the driver regenerated
     // events.parquet with ts as timestamp[us]/NTZ instead of
