@@ -47,9 +47,9 @@ object Tables {
     readRaw(spark, path).schema
 
   /** The session confs that change what Spark infers from a footer. */
-  private val SchemaConfPrefixes =
-    Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.")
-  private val CaseSensitive = "spark.sql.caseSensitive"
+  private def schemaConf(key: String): Boolean =
+    key == "spark.sql.caseSensitive" || key.startsWith("spark.sql.parquet.") ||
+      key.startsWith("spark.sql.legacy.parquet.")
 
   /** One version of one file under one inference-relevant conf. */
   private case class FileVersion(path: String, length: Long,
@@ -86,11 +86,8 @@ object Tables {
     val p = new org.apache.hadoop.fs.Path(path)
     scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(p)).toOption.filter(_.isFile).map { st =>
-      val confs = spark.conf.getAll.filter { case (k, _) =>
-        k == CaseSensitive || SchemaConfPrefixes.exists(k.startsWith)
-      }
       FileVersion(st.getPath.toString, st.getLen, st.getModificationTime,
-        confs)
+        spark.conf.getAll.filter { case (k, _) => schemaConf(k) })
     }
   }
 
