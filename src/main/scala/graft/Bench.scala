@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at the given SF dir and
   * emits ONE JSON line. A query that throws during the timed pass is
@@ -19,33 +18,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core on the box (the driver contract is
-    // local[32]); an explicit SPARK_GRAFT_CPUS still wins
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE swap sort-merge -> shuffled-hash when the runtime map
-      // size fits (the size check IS the OOM guard): big-to-big joins
-      // on high-cardinality keys (shingle/band buckets) skip the sort
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
-      // codegen class cache: the default (100 entries) is sized for a
-      // handful of hot queries, not a 275-query workload — by the time
-      // the timed pass reaches a query, its warm-up-compiled classes
-      // have been evicted and every timed execution pays Janino
-      // compilation again, defeating the warm-up pass's documented
-      // purpose. Sized to hold the whole suite's generated classes
-      // (a few thousand small entries); the same setting is what a
-      // production deployment running a wide query mix would use on
-      // its executors. Static conf — must be set before the session.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark) // SQL functions + optimizer rules
+    val spark = GraftSession.create()
     // optional args = name prefixes, for single-query iteration
     // (the driver invokes with no args -> full suite)
     val all = SparkEntry.queries.keys.toSeq.sorted

@@ -117,7 +117,6 @@ object ClusterCheck {
 
   private def run(spark: SparkSession, dir: String,
       name: String): Seq[String] = {
-    GraftExtensions.register(spark)
     // force the DISTRIBUTED loops: the bounded driver fast paths
     // (Graph / Dedup components) would otherwise shortcut the very
     // cross-JVM iteration shapes this gate exists to prove
@@ -133,13 +132,8 @@ object ClusterCheck {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
 
-    val local = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    local.sparkContext.setLogLevel("WARN")
+    val local = GraftSession.create("local[4]",
+      "spark.sql.shuffle.partitions" -> "8")
     val expected = Gates.map(g => g -> run(local, dir, g)).toMap
     local.stop()
     // force the cluster phase to REBUILD prebuilt state with real
@@ -151,17 +145,10 @@ object ClusterCheck {
     // two worker JVMs x 4 cores x 2 GiB; the forked sbt JVM's literal
     // classpath (target/classes + /opt/spark/jars) is handed to the
     // executor processes, which also need the JDK17 add-opens flags
-    val cluster = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
-      .config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-      .config("spark.executor.extraJavaOptions", AddOpens)
-      .config("spark.graft.checkpoint.mode", "reliable")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    cluster.sparkContext.setLogLevel("WARN")
+    val cluster = GraftSession.create("local-cluster[2,4,2048]",
+      "spark.executor.extraClassPath" -> System.getProperty("java.class.path"),
+      "spark.executor.extraJavaOptions" -> AddOpens,
+      "spark.graft.checkpoint.mode" -> "reliable")
     val verdicts = Gates.map { g =>
       val ok =
         try run(cluster, dir, g) == expected(g)

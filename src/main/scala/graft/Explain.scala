@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of one or more gate
   * queries (`runMain graft.Explain <sfDir> <queryPrefix>...`) — the
@@ -10,15 +9,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val prefixes = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes.isEmpty || prefixes.exists(n.startsWith) }
       .foreach { case (name, fn) =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: formatted plans of the trade-edge derivation with the
   * orderkey-BUCKETED fact layout vs the raw-projection fallback
   * (`runMain graft.ExplainTrade <sfDir>`), each under default planner
@@ -10,15 +8,8 @@ import org.apache.spark.sql.SparkSession
 object ExplainTrade {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
     for (bucketed <- Seq(false, true); bigBig <- Seq(false, true)) {
       val s = spark.newSession()
       s.conf.set("spark.graft.graph.bucketedFacts", bucketed.toString)

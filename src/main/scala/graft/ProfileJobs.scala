@@ -1,32 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Dev tool: per-gate JOB accounting (`runMain graft.ProfileJobs
-  * <queryPrefix>...`) — same session shape as [[ProfileTail]] but
-  * prints every job's call site and description for the LAST (warm)
-  * run, so "this gate pays N jobs" decomposes into WHICH actions and
-  * scaffolding fire. Dev-only: drives the serialized-stage collapse
-  * work on the >2× tail. */
+  * <queryPrefix>...`) — on Bench's engine session, prints every job's
+  * call site and description for the LAST (warm) run, so "this gate
+  * pays N jobs" decomposes into WHICH actions and scaffolding fire.
+  * Dev-only: drives the serialized-stage collapse work on the >2×
+  * tail. */
 object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
-      // suite-sized codegen class cache (see Bench.scala): without it a
-      // 275-query pass recompiles evicted generated classes continually
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = GraftSession.create()
     graft.streaming.WarmRuns.enabled = false
     val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val recording = new java.util.concurrent.atomic.AtomicBoolean(false)

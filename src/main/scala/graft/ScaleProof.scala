@@ -58,18 +58,7 @@ object ScaleProof {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProof <docsDir> [<docsDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        "128m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     args.foreach { dir =>
       val sections = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -129,7 +129,8 @@ object SparkEntry {
       // nothing the 4 serialized stage materializations don't cost
       // several times over), so adaptive re-planning is pure
       // scheduling overhead here: 0.96 → 0.66 s warm medians
-      // (ProfileQ08). NOT applied class-wide — the same A/B measured
+      // (BASELINE.md "Round-16: q08 — the AQE stage-materialization
+      // cut"). NOT applied class-wide — the same A/B measured
       // q207 0.78→0.90 and q193 0.42→0.73 WORSE, so only this
       // verdict-named gate takes it, on a child session so nothing
       // leaks, with the AQE plan one conf away (row-identical, same

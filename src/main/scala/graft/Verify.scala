@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // optional extra args = query-name prefixes (dev iteration; the
     // driver passes exactly two args -> full dump)
     val prefixes = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
-      // suite-sized codegen class cache (see Bench.scala): without it a
-      // 275-query pass recompiles evicted generated classes continually
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark) // SQL functions + optimizer rules
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) =>

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 
 /** Shared session tuning for the streaming harnesses (r16 brief
-  * item 3, measured first by `graft.ProfileStreamStart`): the
+  * item 3, measured in BASELINE.md "Round-16: streaming-query
+  * startup — the checkpoint file manager"): the
   * checkpoint file manager is the dominant per-run cost on local
   * filesystems — the FileContext-based DEFAULT pays roughly 2× the
   * metadata-op cost of Spark's own FileSystem-based alternative for

@@ -4,27 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run
-  * in one forked JVM under `Test / fork := true`). */
+  * in one forked JVM under `Test / fork := true`). Built by
+  * [[GraftSession]], so specs run the engine Bench times. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sqlc = spark
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.streaming.checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.create("local[4]",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString,
+    "spark.sql.streaming.checkpointLocation" ->
+      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
 }
