@@ -32,16 +32,14 @@ object ProfileJobs {
       graft.etl.Checkpoints.sweep(spark)
       graft.etl.Scratch.sweep()
     }
-    val all = SparkEntry.queries.keys.toSeq.sorted
-    val names = if (args.isEmpty) all
-      else all.filter(n => args.exists(n.startsWith))
-    names.foreach { name =>
-      SparkEntry.queries(name)(spark, sfDir).count() // warm-up
+    SparkEntry.select(args.toSeq).foreach { g =>
+      val name = g.name
+      g.build(spark, sfDir).count() // warm-up
       sweep()
       log.clear()
       recording.set(true)
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).count()
+      g.build(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       recording.set(false)
       // listener bus is async: give it a beat to drain before printing

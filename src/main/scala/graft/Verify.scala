@@ -10,14 +10,11 @@ object Verify {
     val prefixes = args.drop(2)
     val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        prefixes.isEmpty || prefixes.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.select(prefixes.toSeq).foreach { g =>
+      try g.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
       }
       // block/scratch hygiene between queries — same contract as Bench
       graft.etl.Checkpoints.sweep(spark)

@@ -1,0 +1,913 @@
+package graft.gates
+
+import org.apache.spark.sql.functions._
+
+import graft.gates.Shared.t
+
+/** Table lifecycle: maintained aggregates, distincts, quantiles, joins
+  * and CDC, schema evolution, compaction, z-order and zone-map layouts,
+  * MV rewrites, merges, time travel and format round trips.
+  *
+  * STEADY-STATE gates (q263 onwards): each lifecycle twin
+  * (q178/q179/q182/q216/q226/q251/q259) prices state CREATION inside its
+  * gate; these price what a user pays PER QUERY against standing state.
+  * The state builds once per JVM (PrebuiltState, the same shape as the
+  * twin) and the gate body is the read (or, for CDC, the fixpoint
+  * refresh). Oracles are the twins': the steady-state path must serve
+  * exactly what a from-scratch computation would. */
+object LifecycleGates {
+
+  val all: Seq[Gate] = Seq(
+
+    // Incrementally-maintained grouped aggregate (materialized-view
+    // maintenance, Mumick et al. 1997): build per-customer order
+    // partials from pre-1997 orders, absorb the 1997+ delta WITHOUT
+    // rescanning the base (bucket-pruned state read + dynamic
+    // partition overwrite of only the touched buckets), then read the
+    // finalized view. The oracle recomputes from scratch over the full
+    // table — the incremental path must be indistinguishable.
+    Gate("q178_incremental_agg", (s, dir) => {
+      val orders = t(s, dir, "orders")
+      val path = graft.etl.Scratch.dir("matagg")
+      graft.etl.MaterializedAgg.create(
+        orders.where(year(col("o_orderdate")) < 1997),
+        Seq("o_custkey"), "o_totalprice", path, nBuckets = 16)
+      graft.etl.MaterializedAgg.refresh(s, path,
+        orders.where(year(col("o_orderdate")) >= 1997),
+        Seq("o_custkey"), "o_totalprice", nBuckets = 16)
+      graft.etl.MaterializedAgg.read(s, path, Seq("o_custkey"))
+        .select(col("o_custkey"), col("n"),
+          round(col("total"), 4).as("total"),
+          round(col("lo"), 4).as("lo"), round(col("hi"), 4).as("hi"),
+          // mean from the ROUNDED total, with NO re-round: both engines
+          // divide bit-identical doubles by the same integer, and any
+          // re-round would land on .xxx75/8 ties where Spark (decimal
+          // HALF_UP) and DuckDB (binary) disagree
+          (round(col("total"), 4) / col("n")).as("mean"))
+        .orderBy("o_custkey")
+    },
+      // the incremental path must be indistinguishable from a full
+      // recompute over base ∪ delta
+      """SELECT o_custkey, COUNT(o_totalprice) AS n,
+        |  ROUND(SUM(o_totalprice), 4) AS total,
+        |  ROUND(MIN(o_totalprice), 4) AS lo,
+        |  ROUND(MAX(o_totalprice), 4) AS hi,
+        |  ROUND(SUM(o_totalprice), 4) / COUNT(o_totalprice) AS mean
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+
+    // Incrementally-maintained DISTINCT counts via mergeable HLL
+    // sketch state: COUNT(DISTINCT) is not self-maintainable from
+    // scalar partials, but sketch union (slot-wise max) is value-set
+    // deterministic — so the incremental estimate must EQUAL the
+    // one-shot estimate bit-for-bit (both read paths route through
+    // hll_union_agg, so no HIP-vs-composite estimator skew), and both
+    // must sit within the lgK=14 error envelope of the exact count
+    // the oracle recomputes. Booleans carry the sketch-side claims.
+    Gate("q179_incremental_distinct", (s, dir) => {
+      val ev = t(s, dir, "events")
+      val keys = Seq("event_type")
+      val p1 = graft.etl.Scratch.dir("mdist-inc")
+      val p2 = graft.etl.Scratch.dir("mdist-oneshot")
+      // the incremental chain (create→refresh on p1) and the one-shot
+      // control build (p2) are independent state dirs — overlapped
+      graft.etl.Par.run(
+        () => {
+          graft.etl.MaterializedDistinct.create(
+            ev.where(col("user_id") % 3 =!= 0), keys, "user_id", p1,
+            nBuckets = 8, lgK = 14)
+          graft.etl.MaterializedDistinct.refresh(s, p1,
+            ev.where(col("user_id") % 3 === 0), keys, "user_id",
+            nBuckets = 8, lgK = 14)
+        },
+        () => graft.etl.MaterializedDistinct.create(ev, keys, "user_id",
+          p2, nBuckets = 8, lgK = 14))
+      val inc = graft.etl.MaterializedDistinct.read(s, p1, keys)
+      val oneShot = graft.etl.MaterializedDistinct.read(s, p2, keys)
+        .withColumnRenamed("n_distinct_est", "est_oneshot")
+      val exact = ev.groupBy(col("event_type"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      inc.join(oneShot, keys).join(exact, keys)
+        .select(col("event_type"), col("n_exact"),
+          (col("n_distinct_est") === col("est_oneshot"))
+            .as("merged_equals_oneshot"),
+          (abs(col("n_distinct_est") - col("n_exact"))
+            <= col("n_exact") * 0.05).as("est_within_5pct"))
+        .orderBy("event_type")
+    },
+      // the sketch-side claims are Spark-computed booleans; the oracle
+      // pins the exact counts and demands both claims hold everywhere
+      """SELECT event_type,
+        |  COUNT(DISTINCT user_id) AS n_exact,
+        |  TRUE AS merged_equals_oneshot,
+        |  TRUE AS est_within_5pct
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    // Incrementally-maintained QUANTILES via deterministic bottom-k
+    // row-sample state (order statistics are not self-maintainable
+    // from scalar partials, and GK/KLL/t-digest are merge-order- or
+    // randomness-sensitive). Build the state from pre-1997 orders,
+    // absorb the 1997+ delta without rescanning the base, and read
+    // p50/p90/p99 per priority. The sample membership is the portable
+    // md5 hash order, so the oracle rebuilds the SAME sample and the
+    // SAME lower-quantile rule over the full table independently —
+    // and a one-shot build must be indistinguishable from the
+    // incremental state (merged_equals_oneshot).
+    Gate("q182_incremental_quantiles", (s, dir) => {
+      val orders = t(s, dir, "orders")
+      val keys = Seq("o_orderpriority")
+      val probs = Seq(("p50", 0.5), ("p90", 0.9), ("p99", 0.99))
+      val pInc = graft.etl.Scratch.dir("mq-inc")
+      val pOne = graft.etl.Scratch.dir("mq-oneshot")
+      // the incremental chain (create→refresh on pInc) and the
+      // one-shot control build (pOne) are independent state dirs —
+      // overlapped
+      graft.etl.Par.run(
+        () => {
+          graft.etl.MaterializedQuantiles.create(
+            orders.where(year(col("o_orderdate")) < 1997),
+            keys, "o_orderkey", "o_totalprice", pInc, k = 256, nBuckets = 8)
+          graft.etl.MaterializedQuantiles.refresh(s, pInc,
+            orders.where(year(col("o_orderdate")) >= 1997),
+            keys, "o_orderkey", "o_totalprice", k = 256, nBuckets = 8)
+        },
+        () => graft.etl.MaterializedQuantiles.create(orders,
+          keys, "o_orderkey", "o_totalprice", pOne, k = 256, nBuckets = 8))
+      val inc = graft.etl.MaterializedQuantiles.read(s, pInc, keys, probs)
+      val one = graft.etl.MaterializedQuantiles.read(s, pOne, keys, probs)
+        .select(col("o_orderpriority"), col("n_sample").as("n1"),
+          col("p50").as("q1"), col("p90").as("q2"), col("p99").as("q3"))
+      inc.join(one, keys)
+        .select(col("o_orderpriority"), col("n_sample"),
+          col("p50"), col("p90"), col("p99"),
+          (col("n_sample") === col("n1") && col("p50") === col("q1") &&
+            col("p90") === col("q2") && col("p99") === col("q3"))
+            .as("merged_equals_oneshot"))
+        .orderBy("o_orderpriority")
+    },
+      // independent rebuild of the deterministic bottom-256 sample (by
+      // portable md5 hash of the order key) and the lower-quantile rule
+      // over the FULL table — must equal the incrementally-maintained
+      // state's view exactly; the one-shot-equality claim is pinned TRUE
+      """WITH h AS (
+        |  SELECT o_orderpriority AS key, o_orderkey AS rid,
+        |    o_totalprice AS v,
+        |    CAST(('0x'||substr(md5('mq:'||CAST(o_orderkey AS VARCHAR)),1,12))
+        |      AS BIGINT) AS h
+        |  FROM orders WHERE o_totalprice IS NOT NULL
+        |), rk AS (
+        |  SELECT key, v,
+        |    row_number() OVER (PARTITION BY key ORDER BY h, rid) AS r
+        |  FROM h
+        |), samp AS (
+        |  SELECT key, list(v ORDER BY v) AS vs, COUNT(1) AS n
+        |  FROM rk WHERE r <= 256 GROUP BY key
+        |)
+        |SELECT key AS o_orderpriority, n AS n_sample,
+        |  vs[CAST(floor((n-1)*0.5) AS BIGINT)+1] AS p50,
+        |  vs[CAST(floor((n-1)*0.9) AS BIGINT)+1] AS p90,
+        |  vs[CAST(floor((n-1)*0.99) AS BIGINT)+1] AS p99,
+        |  TRUE AS merged_equals_oneshot
+        |FROM samp ORDER BY o_orderpriority""".stripMargin),
+
+    // Schema-evolution-tolerant read: a v1 producer lands (doc_id,
+    // text) batches, a v2 producer adds (lang, n_chars); the evolved
+    // read unions the schemas with NULL fill — NO rewrite of the v1
+    // files (rewriting 100 TB because a column appeared is the
+    // anti-pattern). The oracle reconstructs the same union view from
+    // the source table directly.
+    Gate("q186_schema_evolution", (s, dir) => {
+      import org.apache.spark.sql.types._
+      val docs = t(s, dir, "documents")
+      val root = graft.etl.Scratch.dir("evolve")
+      val v1 = StructType(Seq(StructField("doc_id", LongType),
+        StructField("text", StringType)))
+      val v2 = StructType(v1.fields ++ Seq(
+        StructField("lang", StringType),
+        StructField("n_chars", LongType)))
+      graft.etl.SchemaEvolution.appendConformed(
+        docs.where(col("doc_id") % 2 === 0)
+          .select(col("doc_id"), col("text"), col("source")),
+        v1, root, 0L, dropExtras = true)
+      graft.etl.SchemaEvolution.appendConformed(
+        docs.where(col("doc_id") % 2 === 1), v2, root, 1L,
+        dropExtras = true)
+      graft.etl.SchemaEvolution.readEvolved(s, root)
+        .select(col("doc_id"), col("lang"), col("n_chars"),
+          md5(col("text")).as("text_hash"),
+          col("batch").cast("long").as("batch"))
+        .orderBy("doc_id")
+    },
+      // the union view of the evolved batches, reconstructed from the
+      // source table: even docs are v1 (no lang/n_chars), odd are v2
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 2 = 1 THEN lang END AS lang,
+        |  CASE WHEN doc_id % 2 = 1 THEN n_chars END AS n_chars,
+        |  md5(text) AS text_hash,
+        |  doc_id % 2 AS batch
+        |FROM documents ORDER BY doc_id""".stripMargin),
+
+    // Small-file compaction under gate: land the corpus as 64
+    // micro-batch-sized files, compact to ~16MB targets (a metadata-
+    // only file-count decision + one shuffle-free coalesce rewrite
+    // with rename-aside crash safety), and prove the content came
+    // through untouched — the oracle aggregates the SOURCE table; any
+    // dropped/duplicated row or mangled text breaks the checksum.
+    Gate("q192_compaction", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val root = graft.etl.Scratch.dir("compact")
+      docs.repartition(64).write.mode("overwrite").parquet(root)
+      graft.etl.Layout.compact(s, root, targetBytes = 16L * 1024 * 1024)
+      s.read.parquet(root)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("total_chars"),
+          sum(conv(substring(md5(col("text")), 1, 8), 16, 10)
+            .cast("long")).as("content_sum"))
+        .orderBy("source")
+    },
+      // the compacted files must aggregate exactly like the source
+      """SELECT source, COUNT(1) AS n_docs,
+        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
+        |  CAST(SUM(CAST(('0x'||substr(md5(text),1,8)) AS BIGINT))
+        |    AS BIGINT) AS content_sum
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+
+    // Z-order (Morton) clustering key — the layout lever behind
+    // multi-column scan pruning (Layout.writeZOrdered). The oracle
+    // replays the identical mask-cascade bit spreading in DuckDB
+    // arithmetic, pinning every interleaved key bit-for-bit.
+    Gate("q195_zorder_key", (s, dir) => {
+      t(s, dir, "events")
+        .select(col("event_id"),
+          graft.etl.Layout.zOrder2(
+            col("user_id") % 1024, col("event_id") % 1024).as("zkey"))
+        .orderBy("event_id")
+    },
+      // the identical Morton mask cascade in DuckDB arithmetic (hex
+      // masks as decimals — this DuckDB has no hex literals); both
+      // dimensions ride one cascade via a 2-row-per-event union
+      """WITH base AS (
+        |  SELECT event_id, user_id % 1024 AS a, event_id % 1024 AS b
+        |  FROM events
+        |), s AS (
+        |  SELECT event_id, 0 AS w, CAST(a AS BIGINT) & 4294967295 AS v
+        |  FROM base
+        |  UNION ALL
+        |  SELECT event_id, 1 AS w, CAST(b AS BIGINT) & 4294967295 AS v
+        |  FROM base
+        |), c1 AS (SELECT event_id, w,
+        |    (v | (v << 16)) & 281470681808895 AS v FROM s),
+        |c2 AS (SELECT event_id, w,
+        |    (v | (v << 8)) & 71777214294589695 AS v FROM c1),
+        |c3 AS (SELECT event_id, w,
+        |    (v | (v << 4)) & 1085102592571150095 AS v FROM c2),
+        |c4 AS (SELECT event_id, w,
+        |    (v | (v << 2)) & 3689348814741910323 AS v FROM c3),
+        |c5 AS (SELECT event_id, w,
+        |    (v | (v << 1)) & 6148914691236517205 AS v FROM c4)
+        |SELECT event_id,
+        |  CAST(MAX(CASE WHEN w = 0 THEN v END)
+        |    | (MAX(CASE WHEN w = 1 THEN v END) << 1) AS BIGINT) AS zkey
+        |FROM c5 GROUP BY event_id ORDER BY event_id""".stripMargin),
+
+    // CDC changelog apply: events as a per-user change stream ordered
+    // by (ts, event_id), 'error' as the tombstone op — final state =
+    // last event's payload, tombstoned keys absent. One max_by
+    // partial aggregation, no window over the log.
+    Gate("q206_cdc_apply", (s, dir) => {
+      graft.ops.Scd.applyChangelog(t(s, dir, "events"),
+          "user_id", Seq("ts", "event_id"), "event_type",
+          deleteOp = "error", payloadCols = Seq("value"))
+        .orderBy("user_id")
+    },
+      """WITH r AS (
+        |  SELECT user_id, ts, event_id, event_type, value,
+        |    ROW_NUMBER() OVER (PARTITION BY user_id
+        |      ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events
+        |)
+        |SELECT user_id, ts, event_id, value
+        |FROM r WHERE rn = 1 AND event_type <> 'error'
+        |ORDER BY user_id""".stripMargin),
+
+    // Incrementally-maintained CDC state (4th maintained-view leg,
+    // now with DELETE semantics): create from the first half-month,
+    // absorb the second as a delta — "latest per key" is associative,
+    // so the state must equal q206's one-shot apply bit-for-bit
+    // (same oracle).
+    Gate("q216_cdc_maintained", (s, dir) => {
+      val ev = t(s, dir, "events")
+      val cut = to_timestamp(lit("2024-01-15 00:00:00"))
+      val path = graft.etl.Scratch.dir("matcdc")
+      graft.etl.MaterializedCdc.create(ev.where(col("ts") < cut),
+        "user_id", Seq("ts", "event_id"), "event_type", Seq("value"),
+        path, nBuckets = 16)
+      graft.etl.MaterializedCdc.refresh(s, path, ev.where(col("ts") >= cut),
+        "user_id", Seq("ts", "event_id"), "event_type", Seq("value"),
+        nBuckets = 16)
+      graft.etl.MaterializedCdc.read(s, path, "event_type", "error")
+        .select("user_id", "ts", "event_id", "value")
+        .orderBy("user_id")
+    },
+      // q206's oracle verbatim — the incremental state must equal the
+      // one-shot changelog apply
+      """WITH r AS (
+        |  SELECT user_id, ts, event_id, event_type, value,
+        |    ROW_NUMBER() OVER (PARTITION BY user_id
+        |      ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events
+        |)
+        |SELECT user_id, ts, event_id, value
+        |FROM r WHERE rn = 1 AND event_type <> 'error'
+        |ORDER BY user_id""".stripMargin),
+
+    // Zone-map data skipping: land events range-clustered on user_id
+    // with an explicit per-file min/max manifest, then answer a range
+    // query opening ONLY the overlapping files (LayoutSpec asserts
+    // the pruning; this gates the pruned scan's answers).
+    Gate("q225_zonemap_prune", (s, dir) => {
+      val path = graft.etl.Scratch.dir("zm225")
+      graft.etl.Layout.writeZoneMapped(
+        t(s, dir, "events")
+          .select("event_id", "user_id", "event_type", "value"),
+        path, "user_id", numFiles = 16)
+      graft.etl.Layout.readZonePruned(s, path, lit(2L), lit(9L))
+        .where(col("user_id").between(2L, 9L))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 4).as("sum_value"))
+        .orderBy("event_type")
+    },
+      """SELECT event_type, COUNT(1) AS n,
+        |  ROUND(SUM(value), 4) AS sum_value
+        |FROM events WHERE user_id BETWEEN 2 AND 9
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // Optimizer-integrated materialized-view reuse: register the
+    // returnflag/linestatus rollup, then run the SAME aggregation
+    // rebuilt independently — the MvRewrite rule substitutes the
+    // materialization (MvSpec asserts the fact table is NOT
+    // re-scanned; this gates the substituted answers).
+    Gate("q226_mv_rewrite", (s, dir) => {
+      val mvPath = graft.etl.Scratch.dir("mv226")
+      def agg = t(s, dir, "lineitem")
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(round(sum(col("l_quantity")), 4).as("sum_qty"),
+          round(sum(col("l_extendedprice")), 4).as("sum_price"),
+          count(lit(1)).as("n"))
+      graft.etl.Mv.register(agg, mvPath)
+      agg.orderBy("l_returnflag", "l_linestatus")
+    },
+      """SELECT l_returnflag, l_linestatus,
+        |  ROUND(SUM(l_quantity), 4) AS sum_qty,
+        |  ROUND(SUM(l_extendedprice), 4) AS sum_price,
+        |  COUNT(1) AS n
+        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+
+    // MERGE INTO: upsert a source batch into a target snapshot with a
+    // delete clause (matched 'F' rows drop), an update clause
+    // (matched prices uplift 5%), and not-matched inserts — one
+    // full-outer pass, gated row-for-row against the SQL expansion.
+    Gate("q232_merge_upsert", (s, dir) => {
+      val o = t(s, dir, "orders")
+      graft.etl.Merge.mergeInto(
+          o.where(col("o_orderkey") % 3 =!= 0),
+          o.where(col("o_orderkey") % 2 === 0),
+          Seq("o_orderkey"),
+          whenMatchedDelete = col("s.o_orderstatus") === "F",
+          whenMatchedUpdate = Map(
+            "o_totalprice" -> round(col("s.o_totalprice") * 1.05, 4)))
+        .select(col("o_orderkey"), col("o_orderstatus"),
+          round(col("o_totalprice"), 4).as("o_totalprice"))
+        .orderBy("o_orderkey")
+    },
+      """WITH t AS (SELECT * FROM orders WHERE o_orderkey % 3 <> 0),
+        |s AS (SELECT * FROM orders WHERE o_orderkey % 2 = 0),
+        |m AS (
+        |  SELECT coalesce(t.o_orderkey, s.o_orderkey) AS o_orderkey,
+        |    CASE WHEN t.o_orderkey IS NOT NULL
+        |        AND s.o_orderkey IS NOT NULL THEN 'upd'
+        |      WHEN t.o_orderkey IS NOT NULL THEN 'keep'
+        |      ELSE 'ins' END AS src,
+        |    t.o_orderstatus AS t_st, s.o_orderstatus AS s_st,
+        |    t.o_totalprice AS t_tp, s.o_totalprice AS s_tp
+        |  FROM t FULL OUTER JOIN s ON t.o_orderkey = s.o_orderkey
+        |)
+        |SELECT o_orderkey,
+        |  CASE WHEN src = 'ins' THEN s_st ELSE t_st END AS o_orderstatus,
+        |  ROUND(CASE src WHEN 'upd' THEN ROUND(s_tp * 1.05, 4)
+        |    WHEN 'keep' THEN t_tp ELSE s_tp END, 4) AS o_totalprice
+        |FROM m
+        |WHERE NOT (src = 'upd' AND s_st = 'F')
+        |ORDER BY o_orderkey""".stripMargin),
+
+    // Zone-map APPEND maintenance: land half the events, append the
+    // other half (manifest extended incrementally from only the new
+    // files), then answer the same pruned range query as q225 —
+    // same oracle, now over a two-batch layout.
+    Gate("q236_zonemap_append", (s, dir) => {
+      val path = graft.etl.Scratch.dir("zm236")
+      val ev = t(s, dir, "events")
+        .select("event_id", "user_id", "event_type", "value")
+      graft.etl.Layout.writeZoneMapped(
+        ev.where(col("user_id") % 2 === 0), path, "user_id", numFiles = 8)
+      graft.etl.Layout.appendZoneMapped(
+        ev.where(col("user_id") % 2 =!= 0), path, "user_id", numFiles = 8)
+      graft.etl.Layout.readZonePruned(s, path, lit(2L), lit(9L))
+        .where(col("user_id").between(2L, 9L))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 4).as("sum_value"))
+        .orderBy("event_type")
+    },
+      """SELECT event_type, COUNT(1) AS n,
+        |  ROUND(SUM(value), 4) AS sum_value
+        |FROM events WHERE user_id BETWEEN 2 AND 9
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // Incrementally-maintained MV wired into the optimizer rewrite:
+    // stage 90% of events as the base table, create the maintained
+    // view, ingest the remaining 10% as a delta (absorbed into the
+    // bucketed partial state — the base is never rescanned), then
+    // run the canonical aggregate against the BASE table: MvRewrite
+    // must substitute the refreshed MV and the answer must equal the
+    // full dataset's aggregate.
+    Gate("q241_mv_incremental", (s, dir) => {
+      val baseDir = graft.etl.Scratch.dir("mmv241base")
+      val statePath = graft.etl.Scratch.dir("mmv241state")
+      val mvPath = graft.etl.Scratch.dir("mmv241mv")
+      val ev = t(s, dir, "events").select("event_type", "value", "user_id")
+      ev.where(col("user_id") % 10 =!= 0).select("event_type", "value")
+        .write.mode("overwrite").parquet(baseDir)
+      graft.etl.MaintainedMv.create(s, baseDir, Seq("event_type"),
+        "value", statePath, mvPath, nBuckets = 16)
+      graft.etl.MaintainedMv.ingestAndRefresh(s, baseDir,
+        ev.where(col("user_id") % 10 === 0).select("event_type", "value"),
+        Seq("event_type"), "value", statePath, mvPath, nBuckets = 16)
+      graft.etl.MaintainedMv.viewOf(s, baseDir, Seq("event_type"), "value")
+        .select(col("event_type"), col("n"),
+          round(col("total"), 4).as("total"), col("lo"), col("hi"),
+          round(col("mean"), 6).as("mean"))
+        .orderBy("event_type")
+    },
+      // base (90%) ∪ delta (10%) == the whole table, so the maintained
+      // view must answer the full-table aggregate
+      """SELECT event_type, COUNT(value) AS n,
+        |  ROUND(SUM(value), 4) AS total, MIN(value) AS lo,
+        |  MAX(value) AS hi, ROUND(AVG(value), 6) AS mean
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // ORC round-trip (S-family: a second columnar format beside
+    // parquet): land a lineitem projection as ORC, read it back, and
+    // aggregate — the values must match the parquet-native oracle.
+    Gate("q242_orc_roundtrip", (s, dir) => {
+      val path = graft.etl.Scratch.dir("orc242")
+      t(s, dir, "lineitem")
+        .select("l_orderkey", "l_returnflag", "l_quantity",
+          "l_extendedprice")
+        .write.mode("overwrite").orc(path)
+      s.read.orc(path)
+        .groupBy("l_returnflag")
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("l_quantity")), 4).as("sum_qty"),
+          round(sum(col("l_extendedprice")), 4).as("sum_price"))
+        .orderBy("l_returnflag")
+    },
+      // the ORC round-trip must preserve every value bit-for-bit, so
+      // the oracle aggregates the parquet source directly
+      """SELECT l_returnflag, COUNT(1) AS n,
+        |  ROUND(SUM(l_quantity), 4) AS sum_qty,
+        |  ROUND(SUM(l_extendedprice), 4) AS sum_price
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // Manifest time travel over the append-only zone-mapped layout:
+    // commit v1 (even users), append v2 (odd users), then read BOTH
+    // versions — the v1 snapshot must exclude everything the append
+    // landed, the v2 read must see the whole table.
+    Gate("q251_timetravel", (s, dir) => {
+      val path = graft.etl.Scratch.dir("tt251")
+      val ev = t(s, dir, "events")
+        .select("event_id", "user_id", "event_type", "value")
+      graft.etl.Layout.writeZoneMapped(
+        ev.where(col("user_id") % 2 === 0), path, "user_id", 8)
+      graft.etl.Layout.appendZoneMapped(
+        ev.where(col("user_id") % 2 =!= 0), path, "user_id", 8)
+      def aggOf(v: Long) =
+        graft.etl.Layout.readZoneMappedAsOf(s, path, v)
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"),
+            round(sum(col("value")), 4).as("sum_value"))
+          .withColumn("version", lit(v))
+      aggOf(1L).unionByName(aggOf(2L))
+        .select("version", "event_type", "n", "sum_value")
+        .orderBy("version", "event_type")
+    },
+      // v1 committed the even-user half; v2 appended the rest, so the
+      // two snapshots are the even-user subset and the whole table
+      """WITH v1 AS (
+        |  SELECT CAST(1 AS BIGINT) AS version, event_type,
+        |    COUNT(1) AS n, ROUND(SUM(value), 4) AS sum_value
+        |  FROM events WHERE user_id % 2 = 0 GROUP BY 2
+        |), v2 AS (
+        |  SELECT CAST(2 AS BIGINT) AS version, event_type,
+        |    COUNT(1) AS n, ROUND(SUM(value), 4) AS sum_value
+        |  FROM events GROUP BY 2
+        |)
+        |SELECT * FROM v1 UNION ALL SELECT * FROM v2
+        |ORDER BY 1, 2""".stripMargin),
+
+    // File-membership-sketch skipping (the point-lookup complement
+    // of the zone map's range pruning): an equality probe opens only
+    // files whose 16-bit hash-slot set contains the probe's slot;
+    // the exact residual predicate absorbs collisions.
+    Gate("q252_membership_skip", (s, dir) => {
+      val path = graft.etl.Scratch.dir("mm252")
+      graft.etl.Layout.writeMemberMapped(
+        t(s, dir, "events")
+          .select("event_id", "user_id", "event_type", "value"),
+        path, "user_id", numFiles = 16)
+      graft.etl.Layout.readMemberPruned(s, path, lit(7L))
+        .where(col("user_id") === 7L)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 4).as("sum_value"))
+        .orderBy("event_type")
+    },
+      """SELECT event_type, COUNT(1) AS n,
+        |  ROUND(SUM(value), 4) AS sum_value
+        |FROM events WHERE user_id = 7
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // Retention / VACUUM for the time-travel layout (Delta VACUUM
+    // semantics): version-aware compaction lands NEW files as a NEW
+    // version (history stays readable), vacuum drops pre-horizon
+    // manifests and physically reclaims files no retained snapshot
+    // references, and a pre-horizon as-of read REFUSES with a pointed
+    // error — gated here as a marker row — instead of silently
+    // serving files compaction superseded.
+    Gate("q258_retention", (s, dir) => {
+      val path = graft.etl.Scratch.dir("ret258")
+      val ev = t(s, dir, "events")
+        .select("event_id", "user_id", "event_type", "value")
+      graft.etl.Layout.writeZoneMapped(
+        ev.where(col("user_id") % 3 === 0), path, "user_id", 8) // v1
+      graft.etl.Layout.appendZoneMapped(
+        ev.where(col("user_id") % 3 === 1), path, "user_id", 8) // v2
+      graft.etl.Layout.appendZoneMapped(
+        ev.where(col("user_id") % 3 === 2), path, "user_id", 8) // v3
+      graft.etl.Layout.compactZoneMapped(s, path, "user_id", 8) // v4
+      // keep only the compacted snapshot: pre-compaction manifests are
+      // dropped and their superseded data files physically reclaimed
+      val reclaimed = graft.etl.Layout.vacuumZoneMapped(s, path, keepLast = 1)
+      val refused =
+        try { graft.etl.Layout.readZoneMappedAsOf(s, path, 2L); false }
+        catch { case e: IllegalStateException =>
+          e.getMessage.contains("retention horizon") }
+      val marker = s.range(1).select(lit(0L).as("version"),
+        lit("__prehorizon_refused__").as("event_type"),
+        lit(if (refused && reclaimed > 0) 1L else 0L).as("n"),
+        lit(0.0).as("sum_value"))
+      graft.etl.Layout.readZoneMappedAsOf(s, path, 4L)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 4).as("sum_value"))
+        .withColumn("version", lit(4L))
+        .select("version", "event_type", "n", "sum_value")
+        .unionByName(marker)
+        .orderBy("version", "event_type")
+    },
+      // The retained (compacted) snapshot must equal the full table;
+      // the marker row asserts the pre-horizon read REFUSED and files
+      // were physically reclaimed (n = 1 iff both held)
+      """SELECT CAST(0 AS BIGINT) AS version,
+        |  '__prehorizon_refused__' AS event_type,
+        |  CAST(1 AS BIGINT) AS n, CAST(0.0 AS DOUBLE) AS sum_value
+        |UNION ALL
+        |SELECT CAST(4 AS BIGINT) AS version, event_type,
+        |  COUNT(1) AS n, ROUND(SUM(value), 4) AS sum_value
+        |FROM events GROUP BY 2
+        |ORDER BY 1, 2""".stripMargin),
+
+    // Incrementally-maintained JOIN materialization (delta rule
+    // ΔJ = ΔA⋈(B∪ΔB) ∪ A⋈ΔB over bucket-partitioned sides): create
+    // from partial snapshots, absorb one two-sided delta, and the
+    // maintained join must equal the from-scratch join — the oracle
+    // joins the full tables directly. Money summed in integer cents
+    // (exact, order-independent).
+    Gate("q259_maintained_join", (s, dir) => {
+      val path = graft.etl.Scratch.dir("mj259")
+      val orders = t(s, dir, "orders")
+        .select("o_orderkey", "o_orderpriority")
+      val li = t(s, dir, "lineitem")
+        .select("l_orderkey", "l_linenumber", "l_extendedprice")
+      graft.etl.MaterializedJoin.create(
+        orders.where(col("o_orderkey") % 4 =!= 0),
+        li.where(col("l_linenumber") =!= 1),
+        Seq("o_orderkey"), Seq("l_orderkey"), path, nBuckets = 16)
+      graft.etl.MaterializedJoin.refresh(s, path,
+        orders.where(col("o_orderkey") % 4 === 0),
+        li.where(col("l_linenumber") === 1),
+        Seq("o_orderkey"), Seq("l_orderkey"), nBuckets = 16)
+      graft.etl.MaterializedJoin.read(s, path)
+        .groupBy("o_orderpriority")
+        .agg(count(lit(1)).as("n"),
+          round(sum(round(col("l_extendedprice") * 100).cast("long"))
+            .cast("double") / 100, 2).as("revenue"))
+        .orderBy("o_orderpriority")
+    },
+      // the maintained join must be indistinguishable from the
+      // from-scratch join of the full tables
+      """SELECT o_orderpriority, COUNT(1) AS n,
+        |  ROUND(CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT))
+        |    AS DOUBLE) / 100, 2) AS revenue
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // CDC→JOIN composition (batch): a changelog with UPDATES and
+    // DELETES (event_type 'error' = tombstone) maintains the
+    // latest-per-key CDC state, whose emitted upserts (refreshEmit)
+    // rewrite the composed join's touched buckets as expire+insert
+    // (MaterializedJoin.applyUpserts) against the standing per-user
+    // dim. Oracle = from-scratch latest-per-key ⋈ dim over ALL
+    // events — a lost delete leaves a stale joined row, a replayed
+    // upsert cannot duplicate (bucket rewrite, not append).
+    Gate("q261_cdc_join", (s, dir) => {
+      val ev = t(s, dir, "events")
+      val cut = to_timestamp(lit("2024-01-15 00:00:00"))
+      val dim = ev.groupBy(col("user_id").as("u"))
+        .agg(max(col("value")).as("u_max"))
+      val cdcPath = graft.etl.Scratch.dir("cdcj-state")
+      val jPath = graft.etl.Scratch.dir("cdcj-join")
+      // both lifecycle steps overlap their two independent landings:
+      // create lands the CDC state and the composed join from ONE
+      // checkpointed first slice; refresh rewrites the CDC buckets and
+      // the join's touched buckets from ONE checkpointed merge (both
+      // fixpoints — the [[StreamAsBatch.cdcJoinRestarted]] contract)
+      val st = graft.etl.MaterializedCdc.createForCompose(
+        ev.where(col("ts") < cut),
+        "user_id", Seq("ts", "event_id"), "event_type", Seq("value"),
+        nBuckets = 16)
+      graft.etl.Par.run(
+        () => graft.etl.MaterializedCdc.writeCreated(st, cdcPath),
+        () => graft.etl.MaterializedJoin.createFromCdc(
+          graft.etl.MaterializedCdc.live(st, "event_type", "error"),
+          dim, Seq("user_id"), Seq("u"), jPath, nBuckets = 16))
+      graft.etl.Checkpoints.free(st)
+      val (merged, touched) = graft.etl.MaterializedCdc.mergeForCompose(
+        s, cdcPath, ev.where(col("ts") >= cut), "user_id",
+        Seq("ts", "event_id"), "event_type", Seq("value"), nBuckets = 16)
+      graft.etl.Par.run(
+        () => graft.etl.MaterializedCdc.writeMerged(merged, cdcPath),
+        () => graft.etl.MaterializedJoin.applyUpserts(s, jPath,
+          graft.etl.MaterializedCdc.emission(merged),
+          Seq("user_id"), Seq("u"), "event_type", "error", nBuckets = 16,
+          knownTouched = Some(touched)))
+      graft.etl.Checkpoints.free(merged)
+      graft.etl.MaterializedJoin.read(s, jPath)
+        .select(col("user_id"), col("ts"), col("event_id"), col("value"),
+          round(col("u_max"), 4).as("u_max"))
+        .orderBy("user_id")
+    },
+      // the CDC-composed maintained join must equal the from-scratch
+      // latest-per-key (tombstones excluded) ⋈ dim over ALL events
+      """WITH r AS (
+        |  SELECT user_id, ts, event_id, event_type, value,
+        |    ROW_NUMBER() OVER (PARTITION BY user_id
+        |      ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events
+        |), d AS (
+        |  SELECT user_id, MAX(value) AS u_max FROM events GROUP BY 1
+        |)
+        |SELECT r.user_id, r.ts, r.event_id, r.value,
+        |  ROUND(d.u_max, 4) AS u_max
+        |FROM r JOIN d ON r.user_id = d.user_id
+        |WHERE r.rn = 1 AND r.event_type <> 'error'
+        |ORDER BY r.user_id""".stripMargin),
+
+    // MaterializedAgg read: merge the bucket partials (q178's state).
+    Gate("q263_magg_read", (s, dir) => {
+      val path = graft.etl.PrebuiltState.getOrCreate(
+          s"maggRead|$dir", "magg-read") { d =>
+        val orders = t(s, dir, "orders")
+        graft.etl.MaterializedAgg.create(
+          orders.where(year(col("o_orderdate")) < 1997),
+          Seq("o_custkey"), "o_totalprice", d, nBuckets = 16)
+        graft.etl.MaterializedAgg.refresh(s, d,
+          orders.where(year(col("o_orderdate")) >= 1997),
+          Seq("o_custkey"), "o_totalprice", nBuckets = 16)
+      }
+      graft.etl.MaterializedAgg.read(s, path, Seq("o_custkey"))
+        .select(col("o_custkey"), col("n"),
+          round(col("total"), 4).as("total"),
+          round(col("lo"), 4).as("lo"), round(col("hi"), 4).as("hi"),
+          (round(col("total"), 4) / col("n")).as("mean"))
+        .orderBy("o_custkey")
+    },
+      // steady-state reads: the twins' oracles verbatim — standing
+      // state must serve exactly the from-scratch result
+      """SELECT o_custkey, COUNT(o_totalprice) AS n,
+        |  ROUND(SUM(o_totalprice), 4) AS total,
+        |  ROUND(MIN(o_totalprice), 4) AS lo,
+        |  ROUND(MAX(o_totalprice), 4) AS hi,
+        |  ROUND(SUM(o_totalprice), 4) / COUNT(o_totalprice) AS mean
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+
+    // MaterializedQuantiles read (q182's incremental state).
+    Gate("q264_mquant_read", (s, dir) => {
+      val keys = Seq("o_orderpriority")
+      val probs = Seq(("p50", 0.5), ("p90", 0.9), ("p99", 0.99))
+      val path = graft.etl.PrebuiltState.getOrCreate(
+          s"mquantRead|$dir", "mquant-read") { d =>
+        val orders = t(s, dir, "orders")
+        graft.etl.MaterializedQuantiles.create(
+          orders.where(year(col("o_orderdate")) < 1997),
+          keys, "o_orderkey", "o_totalprice", d, k = 256, nBuckets = 8)
+        graft.etl.MaterializedQuantiles.refresh(s, d,
+          orders.where(year(col("o_orderdate")) >= 1997),
+          keys, "o_orderkey", "o_totalprice", k = 256, nBuckets = 8)
+      }
+      graft.etl.MaterializedQuantiles.read(s, path, keys, probs)
+        .select(col("o_orderpriority"), col("n_sample"),
+          col("p50"), col("p90"), col("p99"))
+        .orderBy("o_orderpriority")
+    },
+      """WITH h AS (
+        |  SELECT o_orderpriority AS key, o_orderkey AS rid,
+        |    o_totalprice AS v,
+        |    CAST(('0x'||substr(md5('mq:'||CAST(o_orderkey AS VARCHAR)),1,12))
+        |      AS BIGINT) AS h
+        |  FROM orders WHERE o_totalprice IS NOT NULL
+        |), rk AS (
+        |  SELECT key, v,
+        |    row_number() OVER (PARTITION BY key ORDER BY h, rid) AS r
+        |  FROM h
+        |), samp AS (
+        |  SELECT key, list(v ORDER BY v) AS vs, COUNT(1) AS n
+        |  FROM rk WHERE r <= 256 GROUP BY key
+        |)
+        |SELECT key AS o_orderpriority, n AS n_sample,
+        |  vs[CAST(floor((n-1)*0.5) AS BIGINT)+1] AS p50,
+        |  vs[CAST(floor((n-1)*0.9) AS BIGINT)+1] AS p90,
+        |  vs[CAST(floor((n-1)*0.99) AS BIGINT)+1] AS p99
+        |FROM samp ORDER BY o_orderpriority""".stripMargin),
+
+    // MaterializedCdc read (q216's state).
+    Gate("q265_cdc_read", (s, dir) => {
+      val path = graft.etl.PrebuiltState.getOrCreate(
+          s"cdcRead|$dir", "cdc-read") { d =>
+        val ev = t(s, dir, "events")
+        val cut = to_timestamp(lit("2024-01-15 00:00:00"))
+        graft.etl.MaterializedCdc.create(ev.where(col("ts") < cut),
+          "user_id", Seq("ts", "event_id"), "event_type", Seq("value"),
+          d, nBuckets = 16)
+        graft.etl.MaterializedCdc.refresh(s, d,
+          ev.where(col("ts") >= cut), "user_id", Seq("ts", "event_id"),
+          "event_type", Seq("value"), nBuckets = 16)
+      }
+      graft.etl.MaterializedCdc.read(s, path, "event_type", "error")
+        .select("user_id", "ts", "event_id", "value")
+        .orderBy("user_id")
+    },
+      """WITH r AS (
+        |  SELECT user_id, ts, event_id, event_type, value,
+        |    ROW_NUMBER() OVER (PARTITION BY user_id
+        |      ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events
+        |)
+        |SELECT user_id, ts, event_id, value
+        |FROM r WHERE rn = 1 AND event_type <> 'error'
+        |ORDER BY user_id""".stripMargin),
+
+    // MaterializedJoin read (q259's state, same final aggregation).
+    Gate("q266_mjoin_read", (s, dir) => {
+      val path = graft.etl.PrebuiltState.getOrCreate(
+          s"mjoinRead|$dir", "mjoin-read") { d =>
+        val orders = t(s, dir, "orders")
+          .select("o_orderkey", "o_orderpriority")
+        val li = t(s, dir, "lineitem")
+          .select("l_orderkey", "l_linenumber", "l_extendedprice")
+        graft.etl.MaterializedJoin.create(
+          orders.where(col("o_orderkey") % 4 =!= 0),
+          li.where(col("l_linenumber") =!= 1),
+          Seq("o_orderkey"), Seq("l_orderkey"), d, nBuckets = 16)
+        graft.etl.MaterializedJoin.refresh(s, d,
+          orders.where(col("o_orderkey") % 4 === 0),
+          li.where(col("l_linenumber") === 1),
+          Seq("o_orderkey"), Seq("l_orderkey"), nBuckets = 16)
+      }
+      graft.etl.MaterializedJoin.read(s, path)
+        .groupBy("o_orderpriority")
+        .agg(count(lit(1)).as("n"),
+          round(sum(round(col("l_extendedprice") * 100).cast("long"))
+            .cast("double") / 100, 2).as("revenue"))
+        .orderBy("o_orderpriority")
+    },
+      """SELECT o_orderpriority, COUNT(1) AS n,
+        |  ROUND(CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT))
+        |    AS DOUBLE) / 100, 2) AS revenue
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // MaterializedCdc steady-state REFRESH: the delta re-applies on
+    // every invocation — latest-per-key is a fixpoint, so the gate is
+    // idempotent and measures the true per-refresh cost (delta merge
+    // + touched-bucket rewrite), never the base build.
+    Gate("q267_cdc_refresh", (s, dir) => {
+      val cut = to_timestamp(lit("2024-01-15 00:00:00"))
+      val path = graft.etl.PrebuiltState.getOrCreate(
+          s"cdcRefresh|$dir", "cdc-refresh") { d =>
+        graft.etl.MaterializedCdc.create(
+          t(s, dir, "events").where(col("ts") < cut),
+          "user_id", Seq("ts", "event_id"), "event_type", Seq("value"),
+          d, nBuckets = 16)
+      }
+      graft.etl.MaterializedCdc.refresh(s, path,
+        t(s, dir, "events").where(col("ts") >= cut),
+        "user_id", Seq("ts", "event_id"), "event_type", Seq("value"),
+        nBuckets = 16)
+      graft.etl.MaterializedCdc.read(s, path, "event_type", "error")
+        .select("user_id", "ts", "event_id", "value")
+        .orderBy("user_id")
+    },
+      """WITH r AS (
+        |  SELECT user_id, ts, event_id, event_type, value,
+        |    ROW_NUMBER() OVER (PARTITION BY user_id
+        |      ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM events
+        |)
+        |SELECT user_id, ts, event_id, value
+        |FROM r WHERE rn = 1 AND event_type <> 'error'
+        |ORDER BY user_id""".stripMargin),
+
+    // MaterializedDistinct read (q179's incremental state) plus the
+    // 5%-accuracy claim vs the exact scan (the estimate itself is not
+    // SQL-portable; the boolean contract is).
+    Gate("q268_mdist_read", (s, dir) => {
+      val keys = Seq("event_type")
+      val path = graft.etl.PrebuiltState.getOrCreate(
+          s"mdistRead|$dir", "mdist-read") { d =>
+        val ev = t(s, dir, "events")
+        graft.etl.MaterializedDistinct.create(
+          ev.where(col("user_id") % 3 =!= 0), keys, "user_id", d,
+          nBuckets = 8, lgK = 14)
+        graft.etl.MaterializedDistinct.refresh(s, d,
+          ev.where(col("user_id") % 3 === 0), keys, "user_id",
+          nBuckets = 8, lgK = 14)
+      }
+      val exact = t(s, dir, "events").groupBy(col("event_type"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      graft.etl.MaterializedDistinct.read(s, path, keys)
+        .join(exact, keys)
+        .select(col("event_type"), col("n_exact"),
+          (abs(col("n_distinct_est") - col("n_exact"))
+            <= col("n_exact") * 0.05).as("est_within_5pct"))
+        .orderBy("event_type")
+    },
+      """SELECT event_type,
+        |  COUNT(DISTINCT user_id) AS n_exact,
+        |  TRUE AS est_within_5pct
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    // Zone-mapped layout read at the latest committed version (q251's
+    // two-commit state): manifest-pruned scan, no build inside.
+    Gate("q269_layout_read", (s, dir) => {
+      val path = graft.etl.PrebuiltState.getOrCreate(
+          s"layoutRead|$dir", "layout-read") { d =>
+        val ev = t(s, dir, "events")
+          .select("event_id", "user_id", "event_type", "value")
+        graft.etl.Layout.writeZoneMapped(
+          ev.where(col("user_id") % 2 === 0), d, "user_id", 8)
+        graft.etl.Layout.appendZoneMapped(
+          ev.where(col("user_id") % 2 =!= 0), d, "user_id", 8)
+      }
+      graft.etl.Layout.readZoneMappedAsOf(s, path, 2L)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          round(sum(col("value")), 4).as("sum_value"))
+        .orderBy("event_type")
+    },
+      """SELECT event_type, COUNT(1) AS n,
+        |  ROUND(SUM(value), 4) AS sum_value
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // MV rewrite HIT over a standing materialization (q226's view,
+    // registered once per JVM): the aggregate plan must be served
+    // from the materialization by the rewrite rule.
+    Gate("q270_mv_read", (s, dir) => {
+      def agg = t(s, dir, "lineitem")
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(round(sum(col("l_quantity")), 4).as("sum_qty"),
+          round(sum(col("l_extendedprice")), 4).as("sum_price"),
+          count(lit(1)).as("n"))
+      graft.etl.PrebuiltState.getOrCreate(s"mvRead|$dir", "mv-read") {
+        d => graft.etl.Mv.register(agg, d)
+      }
+      agg.orderBy("l_returnflag", "l_linestatus")
+    },
+      """SELECT l_returnflag, l_linestatus,
+        |  ROUND(SUM(l_quantity), 4) AS sum_qty,
+        |  ROUND(SUM(l_extendedprice), 4) AS sum_price,
+        |  COUNT(1) AS n
+        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+  )
+}

@@ -118,7 +118,7 @@ class BpeStreamDedupSpec extends SparkSpec {
   test("bpeEncode expression equals the replace-fold reference form") {
     val docs = graft.etl.Tables.table(spark, "/root/testdata/sf0.001",
       "documents").select("doc_id", "text")
-    val table = SparkEntry.PinnedBpeMerges
+    val table = graft.gates.TextGates.PinnedBpeMerges
     val fast = Vocab.bpeEncode(docs, "doc_id", "text", table)
     val fold = Vocab.bpeEncodeFold(docs, "doc_id", "text", table)
     val diff = fast.join(fold.withColumnRenamed("pieces", "ref")
@@ -128,7 +128,7 @@ class BpeStreamDedupSpec extends SparkSpec {
   }
 
   test("bpeEncode cascades, non-overlap, and edge cases") {
-    val table = SparkEntry.PinnedBpeMerges
+    val table = graft.gates.TextGates.PinnedBpeMerges
     val docs = Seq(
       (1L, "scan join hash"),   // 3-level cascades to whole words
       (2L, "small"),            // (l,l) non-overlap inside a word

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.gates.Gate
 import graft.ops.{Calendar, Quality}
 
 class OpsSpec extends SparkSpec {
@@ -140,18 +141,32 @@ class OpsSpec extends SparkSpec {
 
   test("driver contract: entry returns rows; queries and oracle keys line up") {
     assert(SparkEntry.entry(spark).count() > 0)
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-    // every query is oracle-gated (q25's IVF gained a DuckDB oracle of
-    // its deterministic assignment in round 4)
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
-    assert(SparkEntry.queries.size == SparkEntry.oracleSql.size)
+    // a Gate declares its builder and its oracle together, so the two
+    // maps' keys line up by construction; a name declared twice must
+    // fail instead of silently replacing the first declaration
+    val g = SparkEntry.gates.head
+    val e = intercept[IllegalArgumentException](
+      Gate.index(Seq(g, g.copy(oracleSql = "SELECT 1"))))
+    assert(e.getMessage.contains(g.name))
   }
+
+  // confs a gate may still set on the caller's session, with the reason
+  private val confSetByDesign = Map(
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" ->
+      "etl.FactBuckets exposes the one-file-per-bucket sort order")
 
   test("all queries run on sf0.001 and return rows") {
     val dir = "/root/testdata/sf0.001"
+    def conf() = spark.conf.getAll -- confSetByDesign.keys
     SparkEntry.queries.foreach { case (name, fn) =>
+      val before = conf()
       val n = fn(spark, dir).count()
       assert(n > 0, s"$name returned no rows")
+      val after = conf()
+      val changed = (before.keySet ++ after.keySet)
+        .filter(k => before.get(k) != after.get(k))
+        .map(k => s"$k: ${before.get(k)} -> ${after.get(k)}")
+      assert(changed.isEmpty, s"$name changed the session conf: $changed")
     }
   }
 

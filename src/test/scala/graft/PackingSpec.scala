@@ -50,7 +50,7 @@ class PackingSpec extends SparkSpec {
       .table(spark, "/root/testdata/sf0.001", "documents")
       .select($"doc_id",
         size(graft.expressions.BpePieces($"text",
-          SparkEntry.PinnedBpeMerges)).cast("long").as("n_tokens"))
+          graft.gates.TextGates.PinnedBpeMerges)).cast("long").as("n_tokens"))
     val packed = Packing.packByBudget(bpeDocs, "doc_id", "n_tokens", budget,
       expr("doc_id div 100"))
     val maxDoc = bpeDocs.agg(max("n_tokens")).as[Long].head()

@@ -147,6 +147,13 @@ class PlanQualitySpec extends SparkSpec {
     "q248_heavy_hitters",   // final rank over the LIMIT-k candidate frame
     "q253_event_paths")     // final rank over the LIMIT-k path frame
 
+  test("every by-name exemption and headline gate is a registered gate") {
+    // an exempted name that no longer exists is a loosened gate nobody sees
+    val named = nestedLoopByDesign ++ globalWindowByDesign ++ Bench.headline
+    val unknown = named.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"not a registered gate: ${unknown.toSeq.sorted}")
+  }
+
   test("order-without-partition windows appear only over bounded-by-design frames") {
     // a Window line prints [funcs], [partition], [order]; the
     // no-partition form has two groups with the second an ordering

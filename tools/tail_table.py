@@ -3,8 +3,8 @@
 definition: ratio > 2 at medians-of-N AND graft median >= 0.9 s) from
 certified bench pair archives, plus the full per-query medians table.
 
-Usage: python3 tools/tail_table.py bench_r15_run{1,2,3}.json \
-           duck_bench_r15_run{1,2,3}.json
+Usage: python3 tools/tail_table.py bench/runs/bench_r15_run{1,2,3}.json \
+           bench/runs/duck_bench_r15_run{1,2,3}.json
 (first half of args = graft records, second half = duckdb records)
 """
 import json
