@@ -71,9 +71,9 @@ object CorpusIngest {
     * file source's seen-files log across the restart.
     *
     * All on-disk state (stage, corpus, index, checkpoint) lives in
-    * sweep-exempt [[graft.etl.Scratch.retainedDir]] dirs, registered
-    * in [[WarmRuns]]: the FIRST invocation per (input, cfg) runs the
-    * full two-epoch kill-and-resume (a fresh key never sees another
+    * sweep-exempt [[graft.etl.Scratch.retainedDir]] dirs of a
+    * [[BoundedStream]] run: the FIRST invocation per (input, cfg) runs
+    * the full two-epoch kill-and-resume (a fresh key never sees another
     * run's committed markers), and a later identical invocation in
     * the same JVM RESUMES from the warm checkpoint — the file source
     * finds no new files, the committed corpus/index are untouched,
@@ -82,43 +82,23 @@ object CorpusIngest {
       documentsParquet: String, idCol: String = "doc_id",
       textCol: String = "text",
       cfg: CorpusClean.Config = CorpusClean.Config()): DataFrame = {
-    import graft.etl.Scratch
-    case class Warm(s: org.apache.spark.sql.SparkSession, stage: String,
-      corpus: String, index: String, ckpt: String)
-    val warmKey = s"ingestRestart|$documentsParquet|$idCol|$textCol|$cfg"
-    def runOnce(s: org.apache.spark.sql.SparkSession, stage: String,
-        corpus: String, index: String, ckpt: String,
-        schema: org.apache.spark.sql.types.StructType): Unit = {
-      val q = start(
-        s.readStream.schema(schema).parquet(stage),
+    def docs(s: org.apache.spark.sql.SparkSession) =
+      graft.etl.Tables.parquetFile(s, documentsParquet)
+        .select(col(idCol), col(textCol))
+    val run = BoundedStream.run(spark,
+        s"ingestRestart|$documentsParquet|$idCol|$textCol|$cfg",
+        Seq("ingest-stage", "ingest-corpus", "ingest-index", "ingest-ckpt"),
+        partitions = 8,
+        waves = Seq(
+          r => docs(r.s).where(col(idCol) % 2 === 0)
+            .write.mode("overwrite").parquet(r.dirs.head),
+          r => docs(r.s).where(col(idCol) % 2 =!= 0)
+            .write.mode("append").parquet(r.dirs.head))) { r =>
+      val Seq(stage, corpus, index, ckpt) = r.dirs
+      start(r.s.readStream.schema(docs(r.s).schema).parquet(stage),
         idCol, textCol, corpus, index, ckpt, cfg)
-      try q.processAllAvailable() finally q.stop()
     }
-    WarmRuns.get[Warm](warmKey)(w =>
-        Seq(w.stage, w.corpus, w.index, w.ckpt)) match {
-      case Some(w) =>
-        val schema = graft.etl.Tables.parquetFile(w.s, documentsParquet)
-          .select(col(idCol), col(textCol)).schema
-        runOnce(w.s, w.stage, w.corpus, w.index, w.ckpt, schema)
-        w.s.read.parquet(w.corpus).select(col(idCol))
-      case None =>
-        val s = StreamTuning.tune(spark.newSession())
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val stage = Scratch.retainedDir("ingest-stage")
-        val corpus = Scratch.retainedDir("ingest-corpus")
-        val index = Scratch.retainedDir("ingest-index")
-        val ckpt = Scratch.retainedDir("ingest-ckpt")
-        val docs = graft.etl.Tables.parquetFile(s, documentsParquet)
-          .select(col(idCol), col(textCol))
-        docs.where(col(idCol) % 2 === 0)
-          .write.mode("overwrite").parquet(stage)
-        runOnce(s, stage, corpus, index, ckpt, docs.schema)
-        docs.where(col(idCol) % 2 =!= 0)
-          .write.mode("append").parquet(stage)
-        runOnce(s, stage, corpus, index, ckpt, docs.schema)
-        WarmRuns.put(warmKey, Warm(s, stage, corpus, index, ckpt))
-        s.read.parquet(corpus).select(col(idCol))
-    }
+    run.s.read.parquet(run.dirs(1)).select(col(idCol))
   }
 
   /** One epoch of the loop (callable directly for batch backfill).

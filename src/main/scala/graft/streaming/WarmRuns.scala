@@ -2,10 +2,10 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
-import scala.reflect.ClassTag
 
 /** Per-JVM registry of WARM streaming runs: a completed gate run's
-  * (session, staged input, checkpoint, sink/state) tuple, keyed by
+  * [[BoundedStream.Run]] (session plus staged-input, checkpoint and
+  * sink/state dirs), keyed by
   * (gate, input path, parameters), so a LATER IDENTICAL invocation in
   * the same JVM RESUMES the query from the warm checkpoint instead of
   * re-staging and re-processing the whole input. The resumed query
@@ -48,25 +48,21 @@ private[graft] object WarmRuns {
     * its restart-metric pass without a hardcoded name list. */
   def putAttempts: Long = attempts.get()
 
-  // keyed by (runtime class, gate key): two harnesses with different
-  // Warm case classes can never collide into a ClassCastException —
-  // a class mismatch is just a miss.
-  private val cache = TrieMap.empty[(Class[_], String), Any]
+  private val cache = TrieMap.empty[String, BoundedStream.Run]
 
-  /** The cached run for `key`, provided every path in `dirs` still
-    * exists (a vanished artifact — external cleanup — falls back to
-    * a cold rebuild). Always None while [[enabled]] is false. */
-  def get[T](key: String)(dirs: T => Seq[String])(
-      implicit ct: ClassTag[T]): Option[T] =
+  /** The cached run for `key`, provided every one of its dirs still
+    * exists (a vanished artifact — external cleanup — falls back to a
+    * cold rebuild). Always None while [[enabled]] is false. */
+  private[streaming] def get(key: String): Option[BoundedStream.Run] =
     if (!enabled) None
-    else cache.get((ct.runtimeClass, key)).map(_.asInstanceOf[T]).filter { v =>
-      val ok = dirs(v).forall(d => new java.io.File(d).exists())
-      if (!ok) cache.remove((ct.runtimeClass, key))
+    else cache.get(key).filter { r =>
+      val ok = r.dirs.forall(d => new java.io.File(d).exists())
+      if (!ok) cache.remove(key)
       ok
     }
 
-  def put[T](key: String, v: T)(implicit ct: ClassTag[T]): Unit = {
+  private[streaming] def put(key: String, r: BoundedStream.Run): Unit = {
     attempts.incrementAndGet()
-    if (enabled) cache.put((ct.runtimeClass, key), v)
+    if (enabled) cache.put(key, r)
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.ops.{Dedup, Vocab}
-import graft.streaming.StreamDedup
+import graft.ops.Vocab
 
 class BpeStreamDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -149,34 +146,5 @@ class BpeStreamDedupSpec extends SparkSpec {
       Seq((1L, Option.empty[String])).toDF("doc_id", "text"),
       "doc_id", "text", table)
     assert(n.head().isNullAt(1))
-  }
-
-  // ---- streaming LSH candidates ----
-
-  test("streamed LSH candidates equal the batch candidates on the same corpus") {
-    val corpus = graft.etl.Tables.table(spark, "/root/testdata/sf0.001",
-      "documents").select("doc_id", "text")
-    val batchPairs = Dedup.lshCandidates(
-        Dedup.minhashSignatures(corpus, "doc_id", "text", 3, 8), "doc_id", 4, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(batchPairs.nonEmpty, "fixture corpus must produce candidates")
-
-    val inDir = java.nio.file.Files.createTempDirectory("sdedup").toString
-    def land(name: String, filter: org.apache.spark.sql.Column): Unit =
-      corpus.where(filter).coalesce(1).write.parquet(s"$inDir/$name")
-    land("b1", col("doc_id") % 2 === 0)
-    val stream = spark.readStream.schema("doc_id long, text string")
-      .parquet(s"$inDir/*")
-    val out = StreamDedup.lshCandidateStream(stream, "doc_id", "text", 3, 8, 4, 2)
-      .toDF("doc_a", "doc_b")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("sdedup_pairs").start()
-    try {
-      q.processAllAvailable()
-      land("b2", col("doc_id") % 2 === 1); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("sdedup_pairs").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(streamed == batchPairs)
   }
 }

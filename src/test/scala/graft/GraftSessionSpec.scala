@@ -45,4 +45,22 @@ class GraftSessionSpec extends SparkSpec {
       .map((p: Path) => root.relativize(p).toString).toSeq.sorted
     assert(builders == Seq("graft/GraftSession.scala"))
   }
+
+  test("src/main reads no hidden JVM property") {
+    // split so this spec is not itself a match for a grep over src/
+    val propsRead = ("sys." + "props").r
+    val graftProperty = ("System\\.get" + "Property\\(\\s*\"graft\\.").r
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val reads = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if propsRead.findFirstIn(line).isDefined ||
+              graftProperty.findFirstIn(line).isDefined =>
+            s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+        }
+      }.toSeq.sorted
+    assert(reads.isEmpty)
+  }
 }
