@@ -37,10 +37,9 @@ object StreamAsBatch {
       val Seq(ckpt, sink) = r.dirs
       EventStream.readEvents(r.s, eventsParquet)
         .groupBy(window(col("ts"), windowDur), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 4).as("sum_value"))
-        .select(col("window.start").as("window_start"),
-          col("event_type"), col("n"), col("sum_value"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
+        .select(col("window.start").as("window_start"), col("event_type"),
+          col("n"), col("sum_value"))
         .writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("overwrite").parquet(sink)
