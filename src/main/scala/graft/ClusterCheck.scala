@@ -75,8 +75,7 @@ object ClusterCheck {
     * planner must share the compact entries exchange (ReusedExchange
     * present, ≤5 live copies). */
   private def q112PlanShared(spark: SparkSession, dir: String): Boolean = {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val s2 = GraftSession.child(spark, "spark.sql.adaptive.enabled" -> "false")
     GraftExtensions.register(s2)
     val plan = SparkEntry.queries("q112_hybrid_rrf")(s2, dir)
       .queryExecution.executedPlan.toString

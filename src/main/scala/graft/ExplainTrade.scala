@@ -11,8 +11,8 @@ object ExplainTrade {
     val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     for (bucketed <- Seq(false, true); bigBig <- Seq(false, true)) {
-      val s = spark.newSession()
-      s.conf.set("spark.graft.graph.bucketedFacts", bucketed.toString)
+      val s = GraftSession.child(spark,
+        "spark.graft.graph.bucketedFacts" -> bucketed.toString)
       if (bigBig) {
         s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")

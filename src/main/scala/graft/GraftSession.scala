@@ -54,4 +54,25 @@ object GraftSession {
     GraftExtensions.register(spark) // SQL functions + optimizer rules
     spark
   }
+
+  /** The one way graft opens a child session: a `newSession()` of
+    * `parent` (own SQL conf, temp views and functions over the same
+    * SparkContext) with `confs` set on it; `parent` is not touched.
+    *
+    * Spark's per-session artifact isolation is off on every child. An
+    * isolated session runs its jobs under its own artifact state and
+    * class loader, and `CodeGenerator`'s class cache is keyed by class
+    * loader and source, so each fresh child, and each clone a
+    * streaming query makes of it at start, compiled again every class
+    * its plan generates, byte-identical or not. graft adds no session
+    * artifacts (jars, files, REPL classes), so isolation protects
+    * nothing here; off, a child reuses the classes any earlier session
+    * compiled. A streaming query's clone copies the child's conf and so
+    * inherits the setting. */
+  def child(parent: SparkSession, confs: (String, String)*): SparkSession = {
+    val s = parent.newSession()
+    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
 }

@@ -3,7 +3,7 @@ package graft.gates
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GraftExtensions
+import graft.{GraftExtensions, GraftSession}
 import graft.gates.Shared.t
 
 /** Temporal, range and skew-aware joins: the as-of joins (backward,
@@ -215,10 +215,9 @@ object JoinGates {
     // RangeJoinSpec asserts the rewritten plan shape (Generate +
     // hash join, no nested loop).
     Gate("q143_rule_range_join", (s, dir) => {
-      val s2 = s.newSession()
+      val s2 = GraftSession.child(s,
+        graft.rules.BucketedRangeJoin.WidthConf -> (2L * 3600 * 1000000).toString)
       GraftExtensions.register(s2)
-      s2.conf.set(graft.rules.BucketedRangeJoin.WidthConf,
-        (2L * 3600 * 1000000).toString)
       t(s2, dir, "events").createOrReplaceTempView("rr_events")
       s2.sql(
         """WITH wins AS (
@@ -256,10 +255,9 @@ object JoinGates {
     // covering buckets; each pair emits only from the later start's
     // bucket — no dedup shuffle).
     Gate("q144_rule_interval_overlap", (s, dir) => {
-      val s2 = s.newSession()
+      val s2 = GraftSession.child(s,
+        graft.rules.BucketedRangeJoin.WidthConf -> (20L * 3600 * 1000000).toString)
       GraftExtensions.register(s2)
-      s2.conf.set(graft.rules.BucketedRangeJoin.WidthConf,
-        (20L * 3600 * 1000000).toString)
       t(s2, dir, "events").createOrReplaceTempView("ro_events")
       s2.sql(
         """WITH wins AS (

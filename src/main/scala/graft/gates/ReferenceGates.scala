@@ -1,9 +1,12 @@
 package graft.gates
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.functions.DateTimeFunctions.yearWeek
 import graft.functions.TextFunctions._
 import graft.gates.Shared.t
@@ -43,6 +46,19 @@ object ReferenceGates {
   private val dailyReturnsSql =
     """SELECT event_id, user_id AS fund_id, event_type AS rtype,
       |       CAST(ts AS DATE) AS mdate, value/1000.0 AS r FROM events""".stripMargin
+
+  /** q155's market calendar: `fixtures/market_calendar_2024.csv` in the
+    * checkout these classes were loaded from, the nearest directory above
+    * their class directory (or jar) that has it; else the same relative
+    * path under the working directory, which q155 then names as missing. */
+  private val marketCalendar: String = {
+    val rel = Paths.get("fixtures", "market_calendar_2024.csv")
+    val classes = Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve(rel)).find(Files.isRegularFile(_))
+      .getOrElse(rel.toAbsolutePath).toString
+  }
 
   val all: Seq[Gate] = Seq(
 
@@ -149,15 +165,12 @@ object ReferenceGates {
       // cut"). NOT applied class-wide — the same A/B measured
       // q207 0.78→0.90 and q193 0.42→0.73 WORSE, so only this
       // verdict-named gate takes it, on a child session so nothing
-      // leaks, with the AQE plan one conf away (row-identical, same
-      // oracle).
+      // leaks (`GraftSession.child`, which also reuses the classes an
+      // earlier run compiled), with the AQE plan one conf away
+      // (row-identical, same oracle).
       val s2 =
         if (s.conf.get("spark.graft.q08.adaptive", "false").toBoolean) s
-        else {
-          val c = s.newSession()
-          c.conf.set("spark.sql.adaptive.enabled", "false")
-          c
-        }
+        else GraftSession.child(s, "spark.sql.adaptive.enabled" -> "false")
       val daily = dailyReturns(s2, dir).withColumn("year_week", yearWeek(col("mdate")))
       Returns.attachGroupAgg(daily, Seq("fund_id", "rtype", "year_week"),
           round(sum(col("r")), 9), "weekly_sum")
@@ -893,14 +906,17 @@ object ReferenceGates {
     // reads the SAME CSV. Exercises Calendar.load's real-CSV path
     // (schema normalization + preserved holiday flags) end-to-end.
     Gate("q155_holiday_calendar", (s, dir) => {
-      val cal = Calendar.load(s, "/root/repo/fixtures/market_calendar_2024.csv")
+      if (!Files.isRegularFile(Paths.get(marketCalendar)))
+        throw new java.io.FileNotFoundException(
+          s"q155 market calendar fixture missing: $marketCalendar")
+      val cal = Calendar.load(s, marketCalendar)
       val daily = Calendar.filterWorkingDays(dailyReturns(s, dir), "mdate", cal)
       Returns.weeklyReturns(daily, "fund_id", "rtype", "mdate", "r")
         .withColumn("weekly_return", round(col("weekly_return"), 6))
         .orderBy("fund_id", "rtype", "year_week")
     },
       s"""WITH cal AS (
-         |  SELECT * FROM read_csv('/root/repo/fixtures/market_calendar_2024.csv',
+         |  SELECT * FROM read_csv('$marketCalendar',
          |                         header = true)
          |), daily AS ($dailyReturnsSql)
          |SELECT fund_id, rtype, strftime(mdate, '%Y-%W') AS year_week,

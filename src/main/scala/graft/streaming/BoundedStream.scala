@@ -26,8 +26,9 @@ private[streaming] object BoundedStream {
     * @param warmKey the gate, its input path and its parameters
     * @param dirNames the prefixes of the run's retained dirs
     * @param partitions the child session's shuffle (and so state)
-    *   partitions. A throwaway `newSession()` keeps this override from
-    *   leaking into a query planned concurrently on the caller's session.
+    *   partitions. A child session ([[graft.GraftSession.child]]) keeps
+    *   this override from leaking into a query planned concurrently on
+    *   the caller's session, and reuses the classes earlier runs compiled.
     *   Few partitions, because state-store open/commit cost is
     *   per-partition per-batch and the result is partition-count
     *   independent; a real long-lived stream at scale would size the
@@ -53,7 +54,6 @@ private[streaming] object BoundedStream {
         drain(warm)
         warm
       case None =>
-        val s = spark.newSession()
         // The checkpoint file manager is the dominant per-run cost on
         // local filesystems (measured in BASELINE.md "Round-16:
         // streaming-query startup — the checkpoint file manager"): the
@@ -67,12 +67,13 @@ private[streaming] object BoundedStream {
         // this is a supported production posture, not a bench trick.
         // Every kill-and-resume gate still proves checkpoint recovery
         // end-to-end against the unchanged oracles.
-        s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-          "org.apache.spark.sql.execution.streaming.checkpointing." +
-            "FileSystemBasedCheckpointFileManager")
-        s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-          noDataBatches.toString)
+        val s = graft.GraftSession.child(spark,
+          "spark.sql.streaming.checkpointFileManagerClass" ->
+            ("org.apache.spark.sql.execution.streaming.checkpointing." +
+              "FileSystemBasedCheckpointFileManager"),
+          "spark.sql.shuffle.partitions" -> partitions.toString,
+          "spark.sql.streaming.noDataMicroBatches.enabled" ->
+            noDataBatches.toString)
         val r = Run(s, dirNames.map(graft.etl.Scratch.retainedDir))
         waves.foreach { stage =>
           stage(r)

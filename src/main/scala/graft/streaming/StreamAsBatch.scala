@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.streaming.BoundedStream.Run
 
@@ -31,23 +32,25 @@ object StreamAsBatch {
     // the aggregate OVERWRITES its result dir each batch — idempotent by
     // construction, and the checkpoint makes it resumable where the
     // memory sink is not
+    var written: StructType = null
     val run = BoundedStream.run(spark, s"q30|$eventsParquet|$windowDur",
         Seq("winagg-ckpt", "winagg-sink"),
         noDataBatches = false) { r => // complete mode re-emits everything
       val Seq(ckpt, sink) = r.dirs
-      EventStream.readEvents(r.s, eventsParquet)
+      val counts = EventStream.readEvents(r.s, eventsParquet)
         .groupBy(window(col("ts"), windowDur), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
         .select(col("window.start").as("window_start"), col("event_type"),
           col("n"), col("sum_value"))
-        .writeStream.outputMode("complete")
+      written = counts.schema
+      counts.writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("overwrite").parquet(sink)
         }
         .option("checkpointLocation", ckpt)
         .start()
     }
-    run.s.read.parquet(run.dirs(1))
+    readWritten(run.s, written, run.dirs(1))
   }
 
   /** Watermarked streaming dedup over a SIMULATED at-least-once
@@ -470,13 +473,16 @@ object StreamAsBatch {
   private def restartedRun(spark: SparkSession, eventsParquet: String,
       warmKey: String, noDataBatches: Boolean = true)(
       build: (SparkSession, String) => DataFrame): DataFrame = {
+    var written: StructType = null
     val run = BoundedStream.run(spark, warmKey,
         Seq("stage", "ckpt", "restart-sink"), noDataBatches = noDataBatches,
         waves = stagedHalves(eventsParquet)) { r =>
       val Seq(stage, ckpt, sink) = r.dirs
-      toFileSink(build(r.s, stage), ckpt, sink)
+      val df = build(r.s, stage)
+      written = df.schema
+      toFileSink(df, ckpt, sink)
     }
-    run.s.read.parquet(run.dirs(2))
+    readWritten(run.s, written, run.dirs(2))
   }
 
   /** Append-mode run over the file sink, reading its source directly.
@@ -486,12 +492,24 @@ object StreamAsBatch {
   private def appendRun(spark: SparkSession, warmKey: String,
       prefix: String, noDataBatches: Boolean = true)(
       build: SparkSession => DataFrame): DataFrame = {
+    var written: StructType = null
     val run = BoundedStream.run(spark, warmKey,
         Seq(s"$prefix-ckpt", s"$prefix-sink"),
         noDataBatches = noDataBatches) { r =>
       val Seq(ckpt, sink) = r.dirs
-      toFileSink(build(r.s), ckpt, sink)
+      val df = build(r.s)
+      written = df.schema
+      toFileSink(df, ckpt, sink)
     }
-    run.s.read.parquet(run.dirs(1))
+    readWritten(run.s, written, run.dirs(1))
   }
+
+  /** Read back the parquet a run's query wrote to `dir`, declaring the
+    * `schema` of the frame it wrote: no schema-inference job over files
+    * this JVM has just written. A file-source read makes every column
+    * nullable, as inference would (and a file sink's `_spark_metadata`
+    * log still decides which files are read). */
+  private def readWritten(s: SparkSession, schema: StructType,
+      dir: String): DataFrame =
+    s.read.schema(schema).parquet(dir)
 }

@@ -4,8 +4,13 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
+import graft.streaming.WarmRuns
+
 /** The engine session every main and spec runs on: Bench's confs, graft's
-  * rules, strategy and SQL functions, and one builder in the code base. */
+  * rules, strategy and SQL functions, one builder in the code base, and
+  * one way to open a child session. */
 class GraftSessionSpec extends SparkSpec {
 
   test("the shared test session carries Bench's engine confs") {
@@ -44,6 +49,46 @@ class GraftSessionSpec extends SparkSpec {
       .filter(p => Files.readString(p).contains(needle))
       .map((p: Path) => root.relativize(p).toString).toSeq.sorted
     assert(builders == Seq("graft/GraftSession.scala"))
+  }
+
+  test("GraftSession.scala is the only place src/main opens a child session") {
+    // split so this spec is not itself a match for a grep over src/
+    val needle = "newSession" + "()"
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val openers = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains(needle))
+      .map((p: Path) => root.relativize(p).toString).toSeq.sorted
+    assert(openers == Seq("graft/GraftSession.scala"))
+  }
+
+  test("GraftSession.child sets its confs on the child only") {
+    val key = "spark.graft.spec.childOnly"
+    val before = spark.conf.getAll
+    val c = GraftSession.child(spark, key -> "on")
+    assert(c.conf.get(key) == "on")
+    assert(c.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    assert(spark.conf.getAll == before)
+    assert(!spark.conf.getAll.contains(key))
+  }
+
+  test("a child session's rerun compiles no generated class again") {
+    // q08 runs in a child session, the two streams in a child and its
+    // per-query clones; warm reuse off makes the second run cold too
+    def compiles(gate: String): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      SparkEntry.queries(gate)(spark, "/root/testdata/sf0.001")
+        .write.format("noop").mode("overwrite").save()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val was = WarmRuns.enabled
+    WarmRuns.enabled = false
+    val again = try {
+      Seq("q08_agg_join_back", "q30_stream_window", "q147_stream_dedup")
+        .map { gate => compiles(gate); gate -> compiles(gate) }
+    } finally WarmRuns.enabled = was
+    assert(again.forall(_._2 == 0L), s"classes compiled again: $again")
   }
 
   test("src/main reads no hidden JVM property") {
