@@ -55,9 +55,9 @@ object GraftSession {
     spark
   }
 
-  /** The one way graft opens a child session: a `newSession()` of
-    * `parent` (own SQL conf, temp views and functions over the same
-    * SparkContext) with `confs` set on it; `parent` is not touched.
+  /** The one way graft opens a child session: a new session of `parent`
+    * (own SQL conf, temp views and functions over the same SparkContext)
+    * with `confs` set on it; `parent` is not touched.
     *
     * Spark's per-session artifact isolation is off on every child. An
     * isolated session runs its jobs under its own artifact state and

@@ -23,7 +23,14 @@ import graft.streaming.BoundedStream.Run
   * per (gate, input, params) key, and a warm resume from the retained
   * checkpoint on a later identical call in the same JVM. What differs
   * per gate is only its query and sink, its arrival waves, and
-  * whether it needs the trailing no-data batch. */
+  * whether it needs the trailing no-data batch.
+  *
+  * A file sink, and q30's overwritten result dir, is read back with the
+  * schema of the frame its query wrote, not by a schema-inference job
+  * over files the run has just written:
+  * a file-source read makes every column nullable, as inference would,
+  * and a file sink's `_spark_metadata` log still decides which files are
+  * read. */
 object StreamAsBatch {
 
   def windowedEventCounts(spark: SparkSession, eventsParquet: String,
@@ -50,7 +57,7 @@ object StreamAsBatch {
         .option("checkpointLocation", ckpt)
         .start()
     }
-    readWritten(run.s, written, run.dirs(1))
+    run.s.read.schema(written).parquet(run.dirs(1))
   }
 
   /** Watermarked streaming dedup over a SIMULATED at-least-once
@@ -482,7 +489,7 @@ object StreamAsBatch {
       written = df.schema
       toFileSink(df, ckpt, sink)
     }
-    readWritten(run.s, written, run.dirs(2))
+    run.s.read.schema(written).parquet(run.dirs(2))
   }
 
   /** Append-mode run over the file sink, reading its source directly.
@@ -501,15 +508,6 @@ object StreamAsBatch {
       written = df.schema
       toFileSink(df, ckpt, sink)
     }
-    readWritten(run.s, written, run.dirs(1))
+    run.s.read.schema(written).parquet(run.dirs(1))
   }
-
-  /** Read back the parquet a run's query wrote to `dir`, declaring the
-    * `schema` of the frame it wrote: no schema-inference job over files
-    * this JVM has just written. A file-source read makes every column
-    * nullable, as inference would (and a file sink's `_spark_metadata`
-    * log still decides which files are read). */
-  private def readWritten(s: SparkSession, schema: StructType,
-      dir: String): DataFrame =
-    s.read.schema(schema).parquet(dir)
 }
