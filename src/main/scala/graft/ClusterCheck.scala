@@ -76,7 +76,6 @@ object ClusterCheck {
     * present, ≤5 live copies). */
   private def q112PlanShared(spark: SparkSession, dir: String): Boolean = {
     val s2 = GraftSession.child(spark, "spark.sql.adaptive.enabled" -> "false")
-    GraftExtensions.register(s2)
     val plan = SparkEntry.queries("q112_hybrid_rrf")(s2, dir)
       .queryExecution.executedPlan.toString
     val live = plan.linesIterator
@@ -114,13 +113,13 @@ object ClusterCheck {
     "java.base/sun.security.action", "java.base/sun.util.calendar")
     .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
 
+  // force the DISTRIBUTED loops: the bounded driver fast paths (Graph /
+  // Dedup components) would otherwise shortcut the cross-JVM iterations
+  private val NoFastPaths = Seq(
+    "spark.graft.graph.smallBound" -> "0", "spark.graft.cc.smallBound" -> "0")
+
   private def run(spark: SparkSession, dir: String,
       name: String): Seq[String] = {
-    // force the DISTRIBUTED loops: the bounded driver fast paths
-    // (Graph / Dedup components) would otherwise shortcut the very
-    // cross-JVM iteration shapes this gate exists to prove
-    spark.conf.set("spark.graft.graph.smallBound", "0")
-    spark.conf.set("spark.graft.cc.smallBound", "0")
     val rows = SparkEntry.queries(name)(spark, dir)
       .collect().map(_.toString).toSeq
     graft.etl.Checkpoints.sweep(spark)
@@ -132,7 +131,7 @@ object ClusterCheck {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
 
     val local = GraftSession.create("local[4]",
-      "spark.sql.shuffle.partitions" -> "8")
+      ("spark.sql.shuffle.partitions" -> "8") +: NoFastPaths: _*)
     val expected = Gates.map(g => g -> run(local, dir, g)).toMap
     local.stop()
     // force the cluster phase to REBUILD prebuilt state with real
@@ -144,10 +143,10 @@ object ClusterCheck {
     // two worker JVMs x 4 cores x 2 GiB; the forked sbt JVM's literal
     // classpath (target/classes + /opt/spark/jars) is handed to the
     // executor processes, which also need the JDK17 add-opens flags
-    val cluster = GraftSession.create("local-cluster[2,4,2048]",
+    val cluster = GraftSession.create("local-cluster[2,4,2048]", Seq(
       "spark.executor.extraClassPath" -> System.getProperty("java.class.path"),
       "spark.executor.extraJavaOptions" -> AddOpens,
-      "spark.graft.checkpoint.mode" -> "reliable")
+      "spark.graft.checkpoint.mode" -> "reliable") ++ NoFastPaths: _*)
     val verdicts = Gates.map { g =>
       val ok =
         try run(cluster, dir, g) == expected(g)

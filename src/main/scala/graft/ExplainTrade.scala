@@ -11,12 +11,11 @@ object ExplainTrade {
     val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     for (bucketed <- Seq(false, true); bigBig <- Seq(false, true)) {
+      val noBroadcast = if (!bigBig) Nil else Seq(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
       val s = GraftSession.child(spark,
-        "spark.graft.graph.bucketedFacts" -> bucketed.toString)
-      if (bigBig) {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      }
+        ("spark.graft.graph.bucketedFacts" -> bucketed.toString) +: noBroadcast: _*)
       val df = graft.ops.Graph.tradeEdges(s, dir)
       df.write.format("noop").mode("overwrite").save()
       val plan = df.queryExecution.executedPlan.toString

@@ -299,4 +299,8 @@ object GraftExtensions {
     spark.experimental.extraStrategies ++=
       strategies.filterNot(spark.experimental.extraStrategies.contains)
   }
+
+  /** Whether [[register]] ran on `spark`. */
+  def registeredOn(spark: org.apache.spark.sql.SparkSession): Boolean =
+    spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy)
 }

@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place an engine session is built. Every main and the test
-  * suite get the confs `Bench` times, so a correctness check never runs
-  * a different engine from the one measured; a caller adds only its
-  * deployment confs (master, classpath, checkpoint mode, scratch dirs).
-  * graft's SQL functions, optimizer rules and planner strategy are
-  * registered before the session is handed out. */
+/** The one place an engine session is built and its state is set. Every
+  * main and the test suite get the confs `Bench` times, so a correctness
+  * check never runs a different engine from the one measured; a caller
+  * adds only its deployment confs (master, classpath, checkpoint mode,
+  * scratch dirs, `etl.ObjectStore.confs`) at build. graft's SQL
+  * functions, optimizer rules and planner strategy are registered on
+  * every session handed out; no gate or operator changes its session. */
 object GraftSession {
 
   /** Cores the engine runs on: `$SPARK_GRAFT_CPUS`, else every core on
@@ -47,6 +48,16 @@ object GraftSession {
       // production deployment running a wide query mix would use on
       // its executors. Static conf — must be set before the session.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // a TIMESTAMP(NANOS) parquet column reads as a LongType of nanos
+      // since epoch instead of failing (PARQUET_TYPE_ILLEGAL);
+      // `etl.Tables` rebuilds exact micros from it
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // expose a bucketed table's per-bucket on-disk sort to the planner
+      // (off by default since SPARK-28216: MULTI-file buckets then pay a
+      // merged-sorted read; `etl.FactBuckets` writes one sorted file per
+      // bucket, where the order is free and removes the SMJ's Sort, and
+      // Spark drops the claim by itself for a bucket with several files)
+      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.ui.enabled", "false")
     val spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
@@ -55,9 +66,11 @@ object GraftSession {
     spark
   }
 
-  /** The one way graft opens a child session: a new session of `parent`
-    * (own SQL conf, temp views and functions over the same SparkContext)
-    * with `confs` set on it; `parent` is not touched.
+  /** The one way graft opens a child session: a new engine session of
+    * `parent` (own SQL conf, temp views and functions over the same
+    * SparkContext and its engine confs) with graft's extensions
+    * registered and `confs` set on it; `parent` is not touched. Per-run
+    * state (a gate's own conf, the views its SQL names) goes here.
     *
     * Spark's per-session artifact isolation is off on every child. An
     * isolated session runs its jobs under its own artifact state and
@@ -73,6 +86,7 @@ object GraftSession {
     val s = parent.newSession()
     s.conf.set("spark.sql.artifact.isolation.enabled", "false")
     confs.foreach { case (k, v) => s.conf.set(k, v) }
+    GraftExtensions.register(s)
     s
   }
 }

@@ -28,10 +28,7 @@ import org.apache.spark.sql.functions.col
   *
   * Fallback: `spark.graft.graph.bucketedFacts=false` (or any build
   * failure) returns the plain projections and the pre-r16 plan —
-  * spec'd for parity in FactBucketsSpec. Bucket count:
-  * `spark.graft.graph.factBuckets` (default 32; a cluster deployment
-  * sizes it to cores × executors the way it would any bucketed
-  * table — the layout, not the constant, is the contract). */
+  * spec'd for parity in FactBucketsSpec. */
 object FactBuckets {
 
   /** Serializes builds so concurrent gates do not double-write. */
@@ -40,8 +37,10 @@ object FactBuckets {
   def enabled(s: SparkSession): Boolean =
     s.conf.get("spark.graft.graph.bucketedFacts", "true").toBoolean
 
-  def nBuckets(s: SparkSession): Int =
-    s.conf.get("spark.graft.graph.factBuckets", "32").toInt
+  /** Buckets per fact table. No main or gate needs another count; a
+    * cluster deployment would size it to cores × executors as it would
+    * any bucketed table (the layout, not the constant, is the contract). */
+  val Buckets = 32
 
   /** The (lineitem, orders) orderkey-keyed projections for `dir`:
     * bucketed-table scans when enabled (built on first use in this
@@ -66,22 +65,14 @@ object FactBuckets {
     * stale catalog entry. */
   def orderkeyBucketed(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     lock.synchronized {
-      // expose the per-bucket on-disk sort to the planner (off by
-      // default since SPARK-28216 because MULTI-file buckets then pay
-      // a merged-sorted read; these tables are written exactly one
-      // sorted file per bucket, where the order is free and removes
-      // the SMJ's per-partition Sort — and Spark still drops the
-      // ordering claim by itself if a bucket ever has several files)
-      s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      val n = nBuckets(s)
       val root = PrebuiltState.getOrCreate(
-          s"factBuckets|$dir|$n", "fact-buckets") { d =>
+          s"factBuckets|$dir|$Buckets", "fact-buckets") { d =>
         val (li, od) = raw(s, dir)
-        writeBucketed(s, li, "l_orderkey", n, s"$d/li", tblName(d, "li"))
-        writeBucketed(s, od, "o_orderkey", n, s"$d/od", tblName(d, "od"))
+        writeBucketed(s, li, "l_orderkey", s"$d/li", tblName(d, "li"))
+        writeBucketed(s, od, "o_orderkey", s"$d/od", tblName(d, "od"))
       }
-      (tableFor(s, tblName(root, "li"), s"$root/li", "l_orderkey", n),
-        tableFor(s, tblName(root, "od"), s"$root/od", "o_orderkey", n))
+      (tableFor(s, tblName(root, "li"), s"$root/li", "l_orderkey"),
+        tableFor(s, tblName(root, "od"), s"$root/od", "o_orderkey"))
     }
 
   private def tblName(root: String, side: String): String = {
@@ -96,19 +87,19 @@ object FactBuckets {
     * Spark requires before it trusts the on-disk sort order (a
     * multi-file bucket forces a Sort above the scan). */
   private def writeBucketed(s: SparkSession, df: DataFrame, key: String,
-      n: Int, path: String, name: String): Unit = {
+      path: String, name: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $name")
-    df.repartition(n, col(key))
-      .write.bucketBy(n, key).sortBy(key)
+    df.repartition(Buckets, col(key))
+      .write.bucketBy(Buckets, key).sortBy(key)
       .option("path", path).mode("overwrite").saveAsTable(name)
   }
 
   private def tableFor(s: SparkSession, name: String, path: String,
-      key: String, n: Int): DataFrame = {
+      key: String): DataFrame = {
     if (!s.catalog.tableExists(name)) {
       val ddl = s.read.parquet(path).schema.toDDL
       s.sql(s"CREATE TABLE $name ($ddl) USING parquet " +
-        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS " +
+        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS " +
         s"LOCATION '$path'")
     }
     s.table(name)

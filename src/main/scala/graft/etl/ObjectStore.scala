@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** Object-store landing contract — the reference's own stated future
   * direction (`README.md` "Future Development": move the JSON landing
   * zone and warehouse to cloud storage; `aws_etl.drawio`). Every graft
@@ -9,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * [[JsonDirSource]], [[WarehouseSink.overwritePath]], persisted
   * index/posting paths), so `s3a://bucket/prefix` flows through every
   * operator unchanged once the standard Hadoop S3A connector is
-  * configured. This object centralizes that configuration using only
-  * public `fs.s3a.*` settings (hadoop-aws), nothing proprietary.
+  * configured. This object lists that configuration, using only public
+  * `fs.s3a.*` settings (hadoop-aws), nothing proprietary, as confs the
+  * engine session is built with; it changes no running session.
   *
   * 100 TB posture — the two settings that actually matter at scale:
   *
@@ -19,11 +18,11 @@ import org.apache.spark.sql.SparkSession
   *    slow (copy+delete per file) and unsafe under failure. The S3A
   *    "magic" committer writes task output as in-flight multipart
   *    uploads and completes them atomically at job commit —
-  *    [[s3aCommitters]] enables it exactly as documented in the
-  *    hadoop-aws committer guide.
+  *    [[confs]] with `committers` enables it exactly as documented in
+  *    the hadoop-aws committer guide.
   *  - '''Connection fan-out.''' A 1000-executor scan issues far more
   *    concurrent GETs than the connector's default pool allows;
-  *    [[configure]] raises `fs.s3a.connection.maximum` / thread pool
+  *    [[confs]] raises `fs.s3a.connection.maximum` / thread pool
   *    alongside the endpoint settings.
   *
   * This sandbox is zero-egress and ships no object store, so the
@@ -43,49 +42,40 @@ object ObjectStore {
       credentialsProvider: Option[String] = None,
       maxConnections: Int = 256)
 
-  /** Apply connector settings to the session's Hadoop configuration.
-    * Idempotent; affects every subsequently-opened `s3a://` path. */
-  def configure(spark: SparkSession, s3: S3Settings = S3Settings()): Unit = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.s3a.impl", "org.apache.hadoop.fs.s3a.S3AFileSystem")
-    s3.endpoint.foreach(hc.set("fs.s3a.endpoint", _))
-    s3.region.foreach(hc.set("fs.s3a.endpoint.region", _))
-    if (s3.pathStyleAccess) hc.set("fs.s3a.path.style.access", "true")
-    s3.credentialsProvider
-      .foreach(hc.set("fs.s3a.aws.credentials.provider", _))
-    hc.set("fs.s3a.connection.maximum", s3.maxConnections.toString)
-    hc.set("fs.s3a.threads.max", (s3.maxConnections / 4).toString)
-    hc.set("fs.s3a.fast.upload", "true")
+  /** Confs for `GraftSession.create(master, confs*)`: the connector
+    * settings as `spark.hadoop.*` (Spark copies them into the context's
+    * Hadoop configuration at start) and, with `committers`, the S3A
+    * magic committer for `s3a://` output. Spark validates committer
+    * classes, so the two SQL committer keys come only when the
+    * `spark-hadoop-cloud` module is on the classpath; its
+    * `PathOutputCommitProtocol` binds per scheme, so `file:/` writes
+    * keep their default committer. */
+  def confs(s3: S3Settings = S3Settings(),
+      committers: Boolean = false): Seq[(String, String)] = {
+    val hadoop = Seq(
+        "fs.s3a.impl" -> "org.apache.hadoop.fs.s3a.S3AFileSystem") ++
+      s3.endpoint.map("fs.s3a.endpoint" -> _) ++
+      s3.region.map("fs.s3a.endpoint.region" -> _) ++
+      Option.when(s3.pathStyleAccess)("fs.s3a.path.style.access" -> "true") ++
+      s3.credentialsProvider.map("fs.s3a.aws.credentials.provider" -> _) ++
+      Seq("fs.s3a.connection.maximum" -> s3.maxConnections.toString,
+        "fs.s3a.threads.max" -> (s3.maxConnections / 4).toString,
+        "fs.s3a.fast.upload" -> "true") ++
+      (if (!committers) Nil else Seq(
+        "fs.s3a.committer.name" -> "magic",
+        "fs.s3a.committer.magic.enabled" -> "true",
+        "mapreduce.outputcommitter.factory.scheme.s3a" ->
+          "org.apache.hadoop.fs.s3a.commit.S3ACommitterFactory"))
+    val sql = if (!committers || !cloudCommitterPresent) Nil else Seq(
+      "spark.sql.parquet.output.committer.class" ->
+        "org.apache.spark.internal.io.cloud.BindingParquetOutputCommitter",
+      "spark.sql.sources.commitProtocolClass" ->
+        "org.apache.spark.internal.io.cloud.PathOutputCommitProtocol")
+    hadoop.map { case (k, v) => s"spark.hadoop.$k" -> v } ++ sql
   }
 
-  /** Enable the S3A magic committer for `s3a://` output paths (the
-    * rename-free, failure-atomic job commit), per the hadoop-aws
-    * committer documentation. Requires the `spark-hadoop-cloud` module
-    * (shipped with Apache Spark distributions) on the classpath —
-    * `PathOutputCommitProtocol` binds per output scheme, so `file:/`
-    * writes keep their default committer. */
-  def s3aCommitters(spark: SparkSession): Boolean = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.s3a.committer.name", "magic")
-    hc.set("fs.s3a.committer.magic.enabled", "true")
-    hc.set("mapreduce.outputcommitter.factory.scheme.s3a",
-      "org.apache.hadoop.fs.s3a.commit.S3ACommitterFactory")
-    // Spark validates committer classes at conf-set time, so the SQL
-    // wiring can only land when spark-hadoop-cloud is actually on the
-    // classpath; report which mode the session got
-    val cloudPresent =
-      try { Class.forName(
-        "org.apache.spark.internal.io.cloud.PathOutputCommitProtocol")
-        true }
-      catch { case _: ClassNotFoundException => false }
-    if (cloudPresent) {
-      spark.conf.set("spark.sql.parquet.output.committer.class",
-        "org.apache.spark.internal.io.cloud.BindingParquetOutputCommitter")
-      spark.conf.set("spark.sql.sources.commitProtocolClass",
-        "org.apache.spark.internal.io.cloud.PathOutputCommitProtocol")
-    }
-    cloudPresent
-  }
+  private def cloudCommitterPresent: Boolean = scala.util.Try(Class.forName(
+    "org.apache.spark.internal.io.cloud.PathOutputCommitProtocol")).isSuccess
 
   /** Resolve a table/landing path against a root URI: the one-line
     * switch between a local layout and an object-store layout.

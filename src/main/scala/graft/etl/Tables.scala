@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZT
   *
   *   - `TIMESTAMP(NANOS)`: Spark's reader rejects it outright
   *     (PARQUET_TYPE_ILLEGAL) unless `spark.sql.legacy.parquet.nanosAsLong`
-  *     is on — then it surfaces as a LongType of nanos since epoch, and we
-  *     rebuild micros with integer division.
+  *     is on (an engine conf [[graft.GraftSession]] fixes at build) — then
+  *     it surfaces as a LongType of nanos since epoch, and we rebuild
+  *     micros with integer division.
   *   - `timestamp[us]` with `isAdjustedToUTC=false`: Spark 4 infers
   *     TIMESTAMP_NTZ by default, which `unix_micros`, watermarks, and
   *     double-casts all reject. We cast to TimestampType — under the
@@ -66,8 +67,7 @@ object Tables {
   /** A plain file reads with the schema Spark inferred for the same file
     * version; a directory, a missing path, a cache miss, a rewritten file
     * or a changed conf infers as Spark does. */
-  private def readRaw(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def readRaw(spark: SparkSession, path: String): DataFrame =
     fileVersion(spark, path) match {
       case Some(v) =>
         Option(schemas.get(v)) match {
@@ -79,7 +79,6 @@ object Tables {
         }
       case None => spark.read.parquet(path)
     }
-  }
 
   private def fileVersion(spark: SparkSession,
       path: String): Option[FileVersion] = {

@@ -24,10 +24,6 @@ object WarehouseSink {
       .parquet(path)
   }
 
-  /** Session-scope CTAS parity: register as a temp view. */
-  def asTempView(df: DataFrame, name: String): Unit =
-    df.createOrReplaceTempView(name)
-
   /** Keyed upsert (MERGE-by-key) into a managed table: existing rows
     * with matching keys are replaced, new rows appended — the
     * incremental-refresh form of [[overwriteTable]] for continuously

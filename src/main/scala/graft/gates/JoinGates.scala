@@ -3,7 +3,7 @@ package graft.gates
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, GraftSession}
+import graft.GraftSession
 import graft.gates.Shared.t
 
 /** Temporal, range and skew-aware joins: the as-of joins (backward,
@@ -217,7 +217,6 @@ object JoinGates {
     Gate("q143_rule_range_join", (s, dir) => {
       val s2 = GraftSession.child(s,
         graft.rules.BucketedRangeJoin.WidthConf -> (2L * 3600 * 1000000).toString)
-      GraftExtensions.register(s2)
       t(s2, dir, "events").createOrReplaceTempView("rr_events")
       s2.sql(
         """WITH wins AS (
@@ -257,7 +256,6 @@ object JoinGates {
     Gate("q144_rule_interval_overlap", (s, dir) => {
       val s2 = GraftSession.child(s,
         graft.rules.BucketedRangeJoin.WidthConf -> (20L * 3600 * 1000000).toString)
-      GraftExtensions.register(s2)
       t(s2, dir, "events").createOrReplaceTempView("ro_events")
       s2.sql(
         """WITH wins AS (

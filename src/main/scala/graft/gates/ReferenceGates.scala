@@ -20,16 +20,15 @@ import graft.ops.{Calendar, Quality, Returns}
   * functions. */
 object ReferenceGates {
 
-  private val viewSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Register `df` under a per-invocation unique temp-view name and
-    * return the name. SQL-surface queries interpolate it, so two
-    * concurrent runs sharing one SparkSession (e.g. two SFs at once)
-    * never clobber each other's views. */
-  private def uniqueView(df: DataFrame, base: String): String = {
-    val name = s"${base}_${viewSeq.incrementAndGet()}"
-    df.createOrReplaceTempView(name)
-    name
+  /** A child session of `s` with each of `tables` (read from `dir`)
+    * registered as a temp view of the same name, for a SQL-surface gate
+    * to query. The views live on the child, so `s` gains none and two
+    * concurrent runs (e.g. two SFs at once) never see each other's. */
+  private def withViews(s: SparkSession, dir: String,
+      tables: String*): SparkSession = {
+    val c = GraftSession.child(s)
+    tables.foreach(n => t(c, dir, n).createOrReplaceTempView(n))
+    c
   }
 
   /** events → market-returns analog used by the compound-return queries:
@@ -42,6 +41,16 @@ object ReferenceGates {
       col("event_type").as("rtype"),
       to_date(col("ts")).as("mdate"),
       (col("value") / 1000.0).as("r"))
+
+  /** q08's frame, planned under whatever adaptive setting `s` has. */
+  private[graft] def q08AggJoinBack(s: SparkSession, dir: String): DataFrame = {
+    val daily = dailyReturns(s, dir).withColumn("year_week", yearWeek(col("mdate")))
+    Returns.attachGroupAgg(daily, Seq("fund_id", "rtype", "year_week"),
+        round(sum(col("r")), 9), "weekly_sum")
+      .select(col("event_id"), col("fund_id"), col("rtype"),
+        col("year_week"), col("weekly_sum"))
+      .orderBy("event_id")
+  }
 
   private val dailyReturnsSql =
     """SELECT event_id, user_id AS fund_id, event_type AS rtype,
@@ -153,31 +162,22 @@ object ReferenceGates {
         |ORDER BY event_id""".stripMargin),
 
     // J2: group aggregate joined back onto detail rows (ipynb cell 12).
-    Gate("q08_agg_join_back", (s, dir) => {
-      // r16 (r15 verdict item 6): this shape is agg → broadcast
-      // join-back → sort, and every strategy decision is STATIC (the
-      // build side is the aggregate of the same frame — broadcast by
-      // size estimate; a broadcast join cannot skew; coalescing saves
-      // nothing the 4 serialized stage materializations don't cost
-      // several times over), so adaptive re-planning is pure
-      // scheduling overhead here: 0.96 → 0.66 s warm medians
-      // (BASELINE.md "Round-16: q08 — the AQE stage-materialization
-      // cut"). NOT applied class-wide — the same A/B measured
-      // q207 0.78→0.90 and q193 0.42→0.73 WORSE, so only this
-      // verdict-named gate takes it, on a child session so nothing
-      // leaks (`GraftSession.child`, which also reuses the classes an
-      // earlier run compiled), with the AQE plan one conf away
-      // (row-identical, same oracle).
-      val s2 =
-        if (s.conf.get("spark.graft.q08.adaptive", "false").toBoolean) s
-        else GraftSession.child(s, "spark.sql.adaptive.enabled" -> "false")
-      val daily = dailyReturns(s2, dir).withColumn("year_week", yearWeek(col("mdate")))
-      Returns.attachGroupAgg(daily, Seq("fund_id", "rtype", "year_week"),
-          round(sum(col("r")), 9), "weekly_sum")
-        .select(col("event_id"), col("fund_id"), col("rtype"),
-          col("year_week"), col("weekly_sum"))
-        .orderBy("event_id")
-    },
+    // r16 (r15 verdict item 6): this shape is agg → broadcast
+    // join-back → sort, and every strategy decision is STATIC (the
+    // build side is the aggregate of the same frame — broadcast by
+    // size estimate; a broadcast join cannot skew; coalescing saves
+    // nothing the 4 serialized stage materializations don't cost
+    // several times over), so adaptive re-planning is pure
+    // scheduling overhead here: 0.96 → 0.66 s warm medians
+    // (BASELINE.md "Round-16: q08 — the AQE stage-materialization
+    // cut"). NOT applied class-wide — the same A/B measured
+    // q207 0.78→0.90 and q193 0.42→0.73 WORSE, so only this
+    // verdict-named gate takes it, on a child session so nothing
+    // leaks (`GraftSession.child`, which also reuses the classes an
+    // earlier run compiled); [[q08AggJoinBack]] on an AQE session is
+    // the AQE plan (row-identical, same oracle).
+    Gate("q08_agg_join_back", (s, dir) => q08AggJoinBack(
+        GraftSession.child(s, "spark.sql.adaptive.enabled" -> "false"), dir),
       s"""WITH daily AS (
          |  SELECT event_id, fund_id, rtype, strftime(mdate, '%Y-%W') AS year_week, r
          |  FROM ($dailyReturnsSql)
@@ -303,13 +303,11 @@ object ReferenceGates {
     // an aggregate + left outer join, COUNT-bug handled — never a
     // per-row subquery execution).
     Gate("q34_correlated", (s, dir) => {
-      val cv = uniqueView(t(s, dir, "customer"), "graft_customer")
-      val ov = uniqueView(t(s, dir, "orders"), "graft_orders")
-      s.sql(
-        s"""SELECT c_custkey, c_name,
-           |       (SELECT COUNT(1) FROM $ov o
-           |        WHERE o.o_custkey = c.c_custkey) AS n_orders
-           |FROM $cv c ORDER BY c_custkey""".stripMargin)
+      withViews(s, dir, "customer", "orders").sql(
+        """SELECT c_custkey, c_name,
+          |       (SELECT COUNT(1) FROM orders o
+          |        WHERE o.o_custkey = c.c_custkey) AS n_orders
+          |FROM customer c ORDER BY c_custkey""".stripMargin)
     },
       """SELECT c_custkey, c_name,
         |       (SELECT COUNT(1) FROM orders o
@@ -411,13 +409,12 @@ object ReferenceGates {
     // Explicit GROUPING SETS (the general grouping-set surface beyond
     // ROLLUP/CUBE): per-type, per-cohort, and grand total.
     Gate("q39_grouping_sets", (s, dir) => {
-      val ev = uniqueView(t(s, dir, "events"), "graft_events")
-      s.sql(
-        s"""SELECT event_type, user_id % 10 AS cohort,
-           |       COUNT(1) AS n, ROUND(SUM(value), 4) AS sum_value
-           |FROM $ev
-           |GROUP BY GROUPING SETS ((event_type), (cohort), ())
-           |ORDER BY event_type ASC NULLS FIRST, cohort ASC NULLS FIRST""".stripMargin)
+      withViews(s, dir, "events").sql(
+        """SELECT event_type, user_id % 10 AS cohort,
+          |       COUNT(1) AS n, ROUND(SUM(value), 4) AS sum_value
+          |FROM events
+          |GROUP BY GROUPING SETS ((event_type), (cohort), ())
+          |ORDER BY event_type ASC NULLS FIRST, cohort ASC NULLS FIRST""".stripMargin)
     },
       """SELECT event_type, user_id % 10 AS cohort,
         |       COUNT(1) AS n, ROUND(SUM(value), 4) AS sum_value
@@ -717,26 +714,25 @@ object ReferenceGates {
     // recursively, then left-join daily counts so gap days surface as
     // zeros instead of silently missing rows.
     Gate("q61_recursive_spine", (s, dir) => {
-      val ev = uniqueView(t(s, dir, "events"), "graft_events")
-      s.sql(
-        s"""WITH RECURSIVE bounds AS (
-           |  SELECT MIN(CAST(ts AS DATE)) AS lo, MAX(CAST(ts AS DATE)) AS hi
-           |  FROM $ev
-           |), spine(d, hi) AS (
-           |  -- carry hi THROUGH the recursion: referencing the bounds
-           |  -- CTE inside the recursive step would rescan the events
-           |  -- aggregate once per iteration
-           |  SELECT lo, hi FROM bounds
-           |  UNION ALL
-           |  SELECT CAST(d + INTERVAL 1 DAY AS DATE), hi FROM spine
-           |  WHERE d < hi
-           |), daily AS (
-           |  SELECT CAST(ts AS DATE) AS d2, COUNT(1) AS n
-           |  FROM $ev GROUP BY 1
-           |)
-           |SELECT d, COALESCE(n, 0) AS n
-           |FROM spine LEFT JOIN daily ON d = d2
-           |ORDER BY d""".stripMargin)
+      withViews(s, dir, "events").sql(
+        """WITH RECURSIVE bounds AS (
+          |  SELECT MIN(CAST(ts AS DATE)) AS lo, MAX(CAST(ts AS DATE)) AS hi
+          |  FROM events
+          |), spine(d, hi) AS (
+          |  -- carry hi THROUGH the recursion: referencing the bounds
+          |  -- CTE inside the recursive step would rescan the events
+          |  -- aggregate once per iteration
+          |  SELECT lo, hi FROM bounds
+          |  UNION ALL
+          |  SELECT CAST(d + INTERVAL 1 DAY AS DATE), hi FROM spine
+          |  WHERE d < hi
+          |), daily AS (
+          |  SELECT CAST(ts AS DATE) AS d2, COUNT(1) AS n
+          |  FROM events GROUP BY 1
+          |)
+          |SELECT d, COALESCE(n, 0) AS n
+          |FROM spine LEFT JOIN daily ON d = d2
+          |ORDER BY d""".stripMargin)
     },
       """WITH RECURSIVE bounds AS (
         |  SELECT MIN(CAST(ts AS DATE)) AS lo, MAX(CAST(ts AS DATE)) AS hi
@@ -784,16 +780,14 @@ object ReferenceGates {
     // nation, expressed as a lateral per-row subquery (Catalyst
     // decorrelates to a ranked join — never a per-row execution).
     Gate("q62_lateral", (s, dir) => {
-      val nv = uniqueView(t(s, dir, "nation"), "graft_nation")
-      val cv = uniqueView(t(s, dir, "customer"), "graft_customer")
-      s.sql(
-        s"""SELECT n_name, c.c_name, c.c_acctbal
-           |FROM $nv, LATERAL (
-           |  SELECT c_name, c_acctbal FROM $cv
-           |  WHERE c_nationkey = n_nationkey
-           |  ORDER BY c_acctbal DESC, c_name LIMIT 2
-           |) AS c
-           |ORDER BY n_name, c_acctbal DESC, c_name""".stripMargin)
+      withViews(s, dir, "nation", "customer").sql(
+        """SELECT n_name, c.c_name, c.c_acctbal
+          |FROM nation, LATERAL (
+          |  SELECT c_name, c_acctbal FROM customer
+          |  WHERE c_nationkey = n_nationkey
+          |  ORDER BY c_acctbal DESC, c_name LIMIT 2
+          |) AS c
+          |ORDER BY n_name, c_acctbal DESC, c_name""".stripMargin)
     },
       """SELECT n_name, c.c_name, c.c_acctbal
         |FROM nation, LATERAL (

@@ -124,15 +124,17 @@ object AsOf {
     * then skips the exchange entirely). Backward + inclusive +
     * LEFT-outer only; the composed [[joinAsOf]] keeps the full
     * direction/tolerance surface. Right-side column names must be
-    * disjoint from the left's (like [[joinAsOf]]). */
+    * disjoint from the left's (like [[joinAsOf]]). The strategy that
+    * plans it is one of graft's extensions, so `left` must come from a
+    * session [[graft.GraftSession]] built or opened. */
   def joinAsOfNative(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTs: String, rightTs: String, payload: Seq[String],
       rightTieBreak: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies
-        .contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies :+= graft.plans.AsOfJoinStrategy
+    require(graft.GraftExtensions.registeredOn(spark),
+      "joinAsOfNative needs graft's AsOfJoinStrategy: build the session " +
+        "with GraftSession.create or open it with GraftSession.child")
     val lp = Bridge.analyzedPlan(left)
     // fresh exprIds on the right so self-joins (left and right derived
     // from one source) cannot alias the same attributes — the dedup

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.{CorpusClean, Dedup}
 
@@ -98,7 +99,9 @@ object CorpusIngest {
       start(r.s.readStream.schema(docs(r.s).schema).parquet(stage),
         idCol, textCol, corpus, index, ckpt, cfg)
     }
-    run.s.read.parquet(run.dirs(1)).select(col(idCol))
+    // the corpus keeps the documents' id field: no inference job
+    run.s.read.schema(StructType(Seq(docs(run.s).schema(idCol))))
+      .parquet(run.dirs(1)).select(col(idCol))
   }
 
   /** One epoch of the loop (callable directly for batch backfill).

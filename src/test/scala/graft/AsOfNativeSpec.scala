@@ -24,6 +24,17 @@ class AsOfNativeSpec extends SparkSpec {
       ("b", 7L, None)))      // b's only row is later
   }
 
+  test("a session without graft's strategy is refused with a pointer to GraftSession") {
+    val bare = spark.newSession() // no extensions registered
+    val left = bare.createDataFrame(Seq(("a", 1L))).toDF("k", "ts")
+    val right = bare.createDataFrame(Seq(("a", 1L, 1.0))).toDF("k", "rts", "v")
+    val e = intercept[IllegalArgumentException](
+      AsOf.joinAsOfNative(left, right, Seq("k"), "ts", "rts", Seq("v")))
+    assert(e.getMessage.contains("GraftSession"))
+    assert(!bare.experimental.extraStrategies
+      .contains(graft.plans.AsOfJoinStrategy))
+  }
+
   test("native equals the composed union-window form on random data") {
     val rnd = new scala.util.Random(11)
     val left = (1 to 2000).map(i =>

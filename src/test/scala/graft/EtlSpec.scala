@@ -187,29 +187,31 @@ class EtlSpec extends SparkSpec {
   }
 
   test("ObjectStore: s3a settings land in hadoopConf; resolve joins URIs") {
-    ObjectStore.configure(spark, ObjectStore.S3Settings(
+    val hadoopBefore = spark.sparkContext.hadoopConfiguration.get("fs.s3a.endpoint")
+    val confBefore = spark.conf.getAll
+    val confs = ObjectStore.confs(ObjectStore.S3Settings(
       endpoint = Some("http://localhost:9000"), region = Some("us-east-1"),
-      pathStyleAccess = true, maxConnections = 512))
-    val hc = spark.sparkContext.hadoopConfiguration
-    assert(hc.get("fs.s3a.endpoint") == "http://localhost:9000")
-    assert(hc.get("fs.s3a.endpoint.region") == "us-east-1")
-    assert(hc.get("fs.s3a.path.style.access") == "true")
-    assert(hc.get("fs.s3a.connection.maximum") == "512")
+      pathStyleAccess = true, maxConnections = 512), committers = true)
+    val c = confs.toMap
+    assert(c.size == confs.size, s"a key listed twice: $confs")
+    // Spark copies spark.hadoop.* into the context's Hadoop conf at start
+    assert(c("spark.hadoop.fs.s3a.endpoint") == "http://localhost:9000")
+    assert(c("spark.hadoop.fs.s3a.endpoint.region") == "us-east-1")
+    assert(c("spark.hadoop.fs.s3a.path.style.access") == "true")
+    assert(c("spark.hadoop.fs.s3a.connection.maximum") == "512")
+    assert(c("spark.hadoop.fs.s3a.threads.max") == "128")
+    assert(c("spark.hadoop.fs.s3a.committer.name") == "magic")
+    assert(!ObjectStore.confs().toMap.contains("spark.hadoop.fs.s3a.committer.name"))
     // the spark-hadoop-cloud module that provides the commit protocol
-    // ships with real Spark distributions but not this sandbox's jar
-    // set: the hadoop-side keys must land either way, and the SQL
-    // wiring must be reported skipped (never half-set a session conf
-    // Spark would reject at write time)
-    val cloudPresent = ObjectStore.s3aCommitters(spark)
-    assert(hc.get("fs.s3a.committer.name") == "magic")
-    assert(!cloudPresent,
-      "sandbox has no spark-hadoop-cloud jar; detection must say so")
-    assert(spark.conf.getOption("spark.sql.sources.commitProtocolClass")
-      .forall(!_.contains("PathOutputCommitProtocol")))
-    // the fs.s3a.* connector settings never touch file:/ writes
-    val p = tmpDir("objstore-roundtrip")
-    Seq((1, "a")).toDF("id", "s").write.mode("overwrite").parquet(p)
-    assert(spark.read.parquet(p).count() == 1)
+    // ships with real Spark distributions but not this jar set: the
+    // SQL committer keys must be left out (never hand Spark a committer
+    // class it would reject at write time)
+    assert(!c.contains("spark.sql.sources.commitProtocolClass") &&
+      !c.contains("spark.sql.parquet.output.committer.class"))
+    assert(c.keySet.forall(_.startsWith("spark.hadoop.")))
+    // listing the confs changes no running session
+    assert(spark.sparkContext.hadoopConfiguration.get("fs.s3a.endpoint") == hadoopBefore)
+    assert(spark.conf.getAll == confBefore)
     assert(ObjectStore.resolve("s3a://corpus/landing/", "/documents")
       == "s3a://corpus/landing/documents")
     assert(ObjectStore.resolve("file:/tmp/wh", "orders")

@@ -58,18 +58,4 @@ class FactBucketsSpec extends SparkSpec {
       .collect().map(_.toSeq)
     assert(raw.nonEmpty && bucketed.toSeq == raw.toSeq)
   }
-
-  test("a bucket-count override yields its own layout and the same rows") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.graph.factBuckets", "8")
-    val (li, od) = graft.etl.FactBuckets.orderkeyFacts(s2, dir)
-    val joined = li.join(od, col("l_orderkey") === col("o_orderkey"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("hashpartitioning(l_orderkey"), plan)
-    val n = joined.count()
-    val s3 = spark.newSession()
-    s3.conf.set("spark.graft.graph.bucketedFacts", "false")
-    val (li3, od3) = graft.etl.FactBuckets.orderkeyFacts(s3, dir)
-    assert(n == li3.join(od3, col("l_orderkey") === col("o_orderkey")).count())
-  }
 }

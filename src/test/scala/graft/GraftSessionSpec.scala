@@ -20,18 +20,33 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "128m",
       "spark.sql.codegen.cache.maxEntries" -> "10000",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
       "spark.ui.enabled" -> "false")
     val got = want.keys.map(k => k -> spark.conf.get(k)).toMap
     assert(got == want)
     assert(spark.sparkContext.master == "local[4]")
   }
 
-  test("graft's rules, strategy and SQL functions are registered") {
-    val exp = spark.experimental
+  private def assertEngineSession(s: org.apache.spark.sql.SparkSession) = {
+    val exp = s.experimental
     assert(exp.extraOptimizations.contains(graft.rules.BucketedRangeJoin))
     assert(exp.extraOptimizations.contains(graft.etl.MvRewrite))
     assert(exp.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-    assert(spark.sql("SELECT jaro_winkler('a', 'a')").head().getDouble(0) == 1.0)
+    assert(s.sql("SELECT jaro_winkler('a', 'a')").head().getDouble(0) == 1.0)
+  }
+
+  test("graft's rules, strategy and SQL functions are registered") {
+    assertEngineSession(spark)
+  }
+
+  test("a child session is an engine session") {
+    val c = GraftSession.child(spark)
+    assertEngineSession(c)
+    // the engine confs create fixed reach the child through the SparkConf
+    for (k <- Seq("spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.legacy.bucketedTableScan.outputOrdering"))
+      assert(c.conf.get(k) == "true", k)
   }
 
   test("shuffle partitions follow the master's cores") {
@@ -52,6 +67,35 @@ class GraftSessionSpec extends SparkSpec {
         .map((p: Path) => root.relativize(p).toString).toSeq.sorted
       assert(hits == Seq("graft/GraftSession.scala"))
     }
+
+  test("GraftSession.scala alone sets session state in src/main") {
+    // needles split so this spec is not itself a match for a grep over src/
+    val needles = Seq(".conf." + "set(", ".conf." + "unset(",
+      "experimental." + "extra")
+    val hadoopConf = "hadoop" + "Configuration"
+    val write = """\.(set\w*|unset|addResource)\("""
+    val directWrite = (hadoopConf + "\\s*" + write).r
+    val alias = ("""\bval\s+(\w+)\s*=.*\b""" + hadoopConf + """\s*$""").r.unanchored
+    val owners = Set("graft/GraftSession.scala", "graft/GraftExtensions.scala")
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(p => owners(root.relativize(p).toString))
+      .flatMap { p =>
+        val code = Files.readAllLines(p).asScala.zipWithIndex.filterNot {
+          case (line, _) => Seq("*", "/*", "//").exists(line.trim.startsWith)
+        }
+        val aliasWrite = code.collect { case (alias(name), _) => name }
+          .map(n => ("\\b" + n + write).r)
+        code.collect {
+          case (line, i) if needles.exists(line.contains) ||
+              (directWrite +: aliasWrite).exists(_.findFirstIn(line).isDefined) =>
+            s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+        }
+      }.toSeq.sorted
+    assert(hits.isEmpty)
+  }
 
   test("GraftSession.child sets its confs on the child only") {
     val key = "spark.graft.spec.childOnly"

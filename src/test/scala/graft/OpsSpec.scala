@@ -150,24 +150,27 @@ class OpsSpec extends SparkSpec {
     assert(e.getMessage.contains(g.name))
   }
 
-  // confs a gate may still set on the caller's session, with the reason
-  private val confSetByDesign = Map(
-    "spark.sql.legacy.bucketedTableScan.outputOrdering" ->
-      "etl.FactBuckets exposes the one-file-per-bucket sort order")
+  /** What a gate could leave on the session it is handed: its conf
+    * entries, temporary views, and extra planner strategies and
+    * optimizer rules, one line each. */
+  private def sessionState(): Seq[String] =
+    spark.conf.getAll.toSeq.map { case (k, v) => s"conf $k=$v" } ++
+      spark.catalog.listTables().collect().filter(_.isTemporary)
+        .map(t => s"temporary view ${t.name}") ++
+      spark.experimental.extraStrategies.map(s => s"strategy $s") ++
+      spark.experimental.extraOptimizations.map(r => s"rule ${r.ruleName}")
 
   test("all queries run on sf0.001 and return rows") {
     val dir = "/root/testdata/sf0.001"
-    def conf() = spark.conf.getAll -- confSetByDesign.keys
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val before = conf()
+    val changed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      val before = sessionState()
       val n = fn(spark, dir).count()
       assert(n > 0, s"$name returned no rows")
-      val after = conf()
-      val changed = (before.keySet ++ after.keySet)
-        .filter(k => before.get(k) != after.get(k))
-        .map(k => s"$k: ${before.get(k)} -> ${after.get(k)}")
-      assert(changed.isEmpty, s"$name changed the session conf: $changed")
+      val after = sessionState()
+      (after.diff(before).map("+ " + _) ++ before.diff(after).map("- " + _))
+        .map(c => s"$name: $c")
     }
+    assert(changed.isEmpty, s"gates changed the session they were handed: $changed")
   }
 
   test("snapshotDiff classifies added/removed/changed and drops unchanged") {

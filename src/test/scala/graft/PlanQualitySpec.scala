@@ -225,9 +225,7 @@ class PlanQualitySpec extends SparkSpec {
     val noAqe = SparkEntry.queries("q08_agg_join_back")(spark, dir)
     assert(!noAqe.queryExecution.executedPlan.toString
       .contains("AdaptiveSparkPlan"), "q08 should plan without AQE by default")
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.q08.adaptive", "true")
-    val aqe = SparkEntry.queries("q08_agg_join_back")(s2, dir)
+    val aqe = graft.gates.ReferenceGates.q08AggJoinBack(spark, dir)
     assert(aqe.queryExecution.executedPlan.toString.contains("AdaptiveSparkPlan"))
     val a = noAqe.collect().map(_.toSeq)
     val b = aqe.collect().map(_.toSeq)

@@ -13,7 +13,6 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = GraftSession.create("local[4]",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.warehouse.dir" ->
       java.nio.file.Files.createTempDirectory("graft-wh").toString,
     "spark.sql.streaming.checkpointLocation" ->

@@ -26,6 +26,22 @@ class TablesSpec extends SparkSpec {
     assert(got.toSeq == want.toSeq)
   }
 
+  test("TIMESTAMP(NANOS) events read as exact micros on the engine session") {
+    // fixtures/nanos/events.parquet (tools/gen_nanos_fixture.py) holds a
+    // real TIMESTAMP(NANOS) column, which Spark rejects unless the engine
+    // conf spark.sql.legacy.parquet.nanosAsLong is on
+    import spark.implicits._
+    val ev = graft.etl.Tables.table(spark, "fixtures/nanos", "events")
+    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    val got = ev.select(col("event_id"), unix_micros(col("ts")))
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(got == Seq(1L -> 1700000000000000L, 2L -> 1699999999999999L,
+      3L -> 1700000000000000L, 4L -> 1700000000000000L,
+      5L -> 1700000000000001L, 6L -> 1700000000000001L,
+      7L -> 1700003600000000L, 8L -> 1700000000000777L,
+      9L -> 1700000000001555L))
+  }
+
   test("TIMESTAMP_NTZ events normalize to session-zoned micros (round-6 testdata shape)") {
     import spark.implicits._
     // Write a timestamp[us] isAdjustedToUTC=false file the way the driver
