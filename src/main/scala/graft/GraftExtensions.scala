@@ -291,16 +291,18 @@ object GraftExtensions {
       org.apache.spark.sql.graftbridge.Bridge.registerFunction(
         spark, name, info(name, usage), builder)
     }
-    val rules = Seq(graft.rules.HammingZeroToEquality,
-      graft.rules.BucketedRangeJoin, graft.etl.MvRewrite)
     spark.experimental.extraOptimizations ++=
       rules.filterNot(spark.experimental.extraOptimizations.contains)
-    val strategies = Seq(graft.plans.AsOfJoinStrategy)
     spark.experimental.extraStrategies ++=
       strategies.filterNot(spark.experimental.extraStrategies.contains)
   }
 
-  /** Whether [[register]] ran on `spark`. */
-  def registeredOn(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy)
+  private val rules = Seq(graft.rules.HammingZeroToEquality,
+    graft.rules.BucketedRangeJoin, graft.etl.MvRewrite)
+  private val strategies = Seq(graft.plans.AsOfJoinStrategy)
+
+  /** Whether `spark` carries every rule and strategy [[register]] adds. */
+  private[graft] def registeredOn(spark: org.apache.spark.sql.SparkSession): Boolean =
+    rules.forall(spark.experimental.extraOptimizations.contains) &&
+      strategies.forall(spark.experimental.extraStrategies.contains)
 }

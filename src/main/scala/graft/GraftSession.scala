@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place an engine session is built and its state is set. Every
   * main and the test suite get the confs `Bench` times, so a correctness
-  * check never runs a different engine from the one measured; a caller
-  * adds only its deployment confs (master, classpath, checkpoint mode,
+  * check runs the engine `Bench` measures (the perfbench harness still
+  * builds its own session, without the two legacy parquet confs); a
+  * caller adds only its deployment confs (master, classpath, checkpoint mode,
   * scratch dirs, `etl.ObjectStore.confs`) at build. graft's SQL
   * functions, optimizer rules and planner strategy are registered on
   * every session handed out; no gate or operator changes its session. */
@@ -68,9 +69,11 @@ object GraftSession {
 
   /** The one way graft opens a child session: a new engine session of
     * `parent` (own SQL conf, temp views and functions over the same
-    * SparkContext and its engine confs) with graft's extensions
-    * registered and `confs` set on it; `parent` is not touched. Per-run
-    * state (a gate's own conf, the views its SQL names) goes here.
+    * SparkContext and its engine confs) that starts from every setting
+    * `parent` was given after birth, with graft's extensions registered
+    * and `confs` set on top; `parent` is not touched. Per-run state (a
+    * gate's own conf, the views its SQL names) goes here, so a gate run
+    * on a child plans under that child's settings.
     *
     * Spark's per-session artifact isolation is off on every child. An
     * isolated session runs its jobs under its own artifact state and
@@ -84,8 +87,10 @@ object GraftSession {
     * inherits the setting. */
   def child(parent: SparkSession, confs: (String, String)*): SparkSession = {
     val s = parent.newSession()
-    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    val born = s.conf.getAll
+    val runtime = parent.conf.getAll.filterNot { case (k, v) => born.get(k).contains(v) }
+    (runtime.toSeq ++ Seq("spark.sql.artifact.isolation.enabled" -> "false") ++ confs)
+      .foreach { case (k, v) => s.conf.set(k, v) }
     GraftExtensions.register(s)
     s
   }

@@ -192,24 +192,34 @@ class EtlSpec extends SparkSpec {
     val confs = ObjectStore.confs(ObjectStore.S3Settings(
       endpoint = Some("http://localhost:9000"), region = Some("us-east-1"),
       pathStyleAccess = true, maxConnections = 512), committers = true)
-    val c = confs.toMap
-    assert(c.size == confs.size, s"a key listed twice: $confs")
-    // Spark copies spark.hadoop.* into the context's Hadoop conf at start
-    assert(c("spark.hadoop.fs.s3a.endpoint") == "http://localhost:9000")
-    assert(c("spark.hadoop.fs.s3a.endpoint.region") == "us-east-1")
-    assert(c("spark.hadoop.fs.s3a.path.style.access") == "true")
-    assert(c("spark.hadoop.fs.s3a.connection.maximum") == "512")
-    assert(c("spark.hadoop.fs.s3a.threads.max") == "128")
-    assert(c("spark.hadoop.fs.s3a.committer.name") == "magic")
+    assert(confs.toMap.size == confs.size, s"a key listed twice: $confs")
+    assert(confs.forall(_._1.startsWith("spark.hadoop.")))
     assert(!ObjectStore.confs().toMap.contains("spark.hadoop.fs.s3a.committer.name"))
+    // a context started with them (GraftSession.create) has their
+    // fs.s3a.* settings in its Hadoop conf
+    val hc = org.apache.spark.graftspec.HadoopConfs.atStart(confs)
+    assert(hc.get("fs.s3a.endpoint") == "http://localhost:9000")
+    assert(hc.get("fs.s3a.endpoint.region") == "us-east-1")
+    assert(hc.get("fs.s3a.path.style.access") == "true")
+    assert(hc.get("fs.s3a.connection.maximum") == "512")
+    assert(hc.get("fs.s3a.threads.max") == "128")
+    assert(hc.get("fs.s3a.committer.name") == "magic")
     // the spark-hadoop-cloud module that provides the commit protocol
     // ships with real Spark distributions but not this jar set: the
     // SQL committer keys must be left out (never hand Spark a committer
     // class it would reject at write time)
-    assert(!c.contains("spark.sql.sources.commitProtocolClass") &&
-      !c.contains("spark.sql.parquet.output.committer.class"))
-    assert(c.keySet.forall(_.startsWith("spark.hadoop.")))
-    // listing the confs changes no running session
+    assert(!confs.exists(_._1.startsWith("spark.sql.")))
+    // the fs.s3a.* connector and committer settings never touch file:/
+    // writes: a session copies its conf entries into the Hadoop conf of
+    // every read and write it runs, so a child given the same keys as
+    // that context reads and writes under the same Hadoop settings
+    val c = GraftSession.child(spark,
+      confs.map { case (k, v) => k.stripPrefix("spark.hadoop.") -> v }: _*)
+    assert(c.sessionState.newHadoopConf().get("fs.s3a.committer.name") == "magic")
+    val p = tmpDir("objstore-roundtrip")
+    c.createDataFrame(Seq((1, "a"))).toDF("id", "s").write.mode("overwrite").parquet(p)
+    assert(c.read.parquet(p).count() == 1)
+    // the session the child came from is untouched
     assert(spark.sparkContext.hadoopConfiguration.get("fs.s3a.endpoint") == hadoopBefore)
     assert(spark.conf.getAll == confBefore)
     assert(ObjectStore.resolve("s3a://corpus/landing/", "/documents")

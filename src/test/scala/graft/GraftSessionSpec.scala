@@ -106,6 +106,23 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.getAll == before)
   }
 
+  test("a gate that runs on its own child plans under its caller's settings") {
+    // q34 reads its sources into views on a child of the session it is
+    // handed; that child starts from the caller's settings, whether Spark
+    // knows the key or not
+    val key = "spark.graft.spec.inherited"
+    val caller = GraftSession.child(spark,
+      "spark.sql.adaptive.enabled" -> "false", key -> "on")
+    def q34(s: org.apache.spark.sql.SparkSession) =
+      SparkEntry.queries("q34_correlated")(s, "/root/testdata/sf0.001")
+    val adaptive = classOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
+    assert(adaptive.isInstance(q34(spark).queryExecution.executedPlan))
+    val df = q34(caller)
+    assert(df.sparkSession ne caller)
+    assert(df.sparkSession.conf.get(key) == "on")
+    assert(!adaptive.isInstance(df.queryExecution.executedPlan))
+  }
+
   test("a child session's rerun compiles no generated class again") {
     // q08 runs in a child session, the two streams in a child and its
     // per-query clones; warm reuse off makes the second run cold too
