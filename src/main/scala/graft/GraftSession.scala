@@ -1,15 +1,18 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
 /** The one place an engine session is built and its state is set. Every
   * main and the test suite get the confs `Bench` times, so a correctness
   * check runs the engine `Bench` measures (the perfbench harness still
-  * builds its own session, without the two legacy parquet confs); a
-  * caller adds only its deployment confs (master, classpath, checkpoint mode,
-  * scratch dirs, `etl.ObjectStore.confs`) at build. graft's SQL
-  * functions, optimizer rules and planner strategy are registered on
-  * every session handed out; no gate or operator changes its session. */
+  * builds its own session, without the two legacy parquet confs and the
+  * storage confs); a caller adds only its deployment confs (master,
+  * classpath, checkpoint mode, scratch dirs, `etl.ObjectStore.confs`) at
+  * build. graft's SQL functions, optimizer rules and planner strategy are
+  * registered on every session handed out, and graft's storage settings
+  * ([[StorageConfs]]) hold on every one and in graft's own Hadoop I/O
+  * ([[hadoopConf]]); no gate or operator changes its session. */
 object GraftSession {
 
   /** Cores the engine runs on: `$SPARK_GRAFT_CPUS`, else every core on
@@ -25,6 +28,45 @@ object GraftSession {
     case LocalN(n) => n.toInt
     case LocalCluster(executors, cores) => executors.toInt * cores.toInt
     case _ => cpus
+  }
+
+  /** graft's storage settings, the same on every engine session: the
+    * context `create` builds carries them in its Hadoop conf, every
+    * [[child]] sets them on itself (so a child of a session graft did not
+    * build gets them too), and [[hadoopConf]] applies them to graft's own
+    * driver-side Hadoop I/O.
+    *
+    *  - `file://` is [[graft.etl.LocalFs]], which sets a created file's
+    *    mode by syscall instead of a `chmod` process per file.
+    *  - The FileSystem cache is off for `file://`: Hadoop caches one
+    *    instance per scheme per JVM, built from whichever conf asks
+    *    first, so a cached stock instance would serve every later conf.
+    *  - Streams checkpoint through Spark's FileSystem-based manager, so
+    *    their logs and state deltas go through `fs.file.impl`. The
+    *    FileContext-based default bypasses it, and pays roughly 2× the
+    *    metadata-op cost of the FileSystem-based one for the
+    *    offset/commit/state-delta log writes every micro-batch commits (a
+    *    minimal session-window run dropped 1.6 → 0.8 s with nothing else
+    *    changed; BASELINE.md "Round-16: streaming-query startup — the
+    *    checkpoint file manager"). Both implement the same rename-based
+    *    atomic commit, and Spark itself falls back to the FileSystem-based
+    *    one wherever FileContext is unavailable; every kill-and-resume
+    *    gate still proves checkpoint recovery against its oracle. */
+  val StorageConfs: Seq[(String, String)] = Seq(
+    "fs.file.impl" -> classOf[graft.etl.LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      ("org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager"))
+
+  /** The Hadoop conf graft's driver-side I/O on `spark`'s behalf uses:
+    * the session's own (its context's Hadoop conf plus every setting the
+    * session was given, such as a child's `fs.s3a.*` keys) with
+    * [[StorageConfs]] applied. */
+  def hadoopConf(spark: SparkSession): Configuration = {
+    val c = spark.sessionState.newHadoopConf()
+    StorageConfs.foreach { case (k, v) => c.set(k, v) }
+    c
   }
 
   def create(): SparkSession = create(s"local[$cpus]")
@@ -60,7 +102,9 @@ object GraftSession {
       // Spark drops the claim by itself for a bucket with several files)
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.ui.enabled", "false")
-    val spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+    val storage = StorageConfs.map { case (k, v) =>
+      (if (k.startsWith("spark.")) k else s"spark.hadoop.$k") -> v }
+    val spark = (storage ++ confs).foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.register(spark) // SQL functions + optimizer rules
@@ -70,8 +114,8 @@ object GraftSession {
   /** The one way graft opens a child session: a new engine session of
     * `parent` (own SQL conf, temp views and functions over the same
     * SparkContext and its engine confs) that starts from every setting
-    * `parent` was given after birth, with graft's extensions registered
-    * and `confs` set on top; `parent` is not touched. Per-run state (a
+    * `parent` was given after birth, with graft's extensions registered,
+    * [[StorageConfs]] and then `confs` set on top; `parent` is not touched. Per-run state (a
     * gate's own conf, the views its SQL names) goes here, so a gate run
     * on a child plans under that child's settings.
     *
@@ -89,7 +133,8 @@ object GraftSession {
     val s = parent.newSession()
     val born = s.conf.getAll
     val runtime = parent.conf.getAll.filterNot { case (k, v) => born.get(k).contains(v) }
-    (runtime.toSeq ++ Seq("spark.sql.artifact.isolation.enabled" -> "false") ++ confs)
+    (runtime.toSeq ++ Seq("spark.sql.artifact.isolation.enabled" -> "false") ++
+        StorageConfs ++ confs)
       .foreach { case (k, v) => s.conf.set(k, v) }
     GraftExtensions.register(s)
     s

@@ -49,12 +49,13 @@ object Layout {
       case _ => false
     }
     if (!eligible) return None
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = graft.GraftSession.hadoopConf(spark)
     val rows = scala.util.Try {
       files.map { f =>
         val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+          org.apache.parquet.HadoopReadOptions.builder(conf).build())
         try {
           val blocks = reader.getFooter.getBlocks
           var nRows = 0L
@@ -110,7 +111,7 @@ object Layout {
       files: Seq[String], clusterCol: String,
       clusterType: org.apache.spark.sql.types.DataType,
       dest: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = graft.GraftSession.hadoopConf(spark)
     val done = (for {
       schema <- ManifestIo.manifestSchema(clusterType)
       rows <- footerStats(spark, files, clusterCol, clusterType)
@@ -118,7 +119,7 @@ object Layout {
       ManifestIo.writeZoneRows(conf, dest, schema, rows)).isSuccess)
       .getOrElse(false)
     if (!done)
-      spark.read.parquet(files: _*)
+      Tables.readParquet(spark, files)
         .groupBy(input_file_name().as("file"))
         .agg(min(col(clusterCol)).as("min_v"),
           max(col(clusterCol)).as("max_v"),
@@ -133,7 +134,7 @@ object Layout {
     * is literally "as first written". */
   private def copyManifestDir(spark: org.apache.spark.sql.SparkSession,
       from: String, to: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = graft.GraftSession.hadoopConf(spark)
     val src = new org.apache.hadoop.fs.Path(from)
     val dst = new org.apache.hadoop.fs.Path(to)
     val fs = dst.getFileSystem(conf)
@@ -182,7 +183,7 @@ object Layout {
     * SQL predicate's null semantics exclude them. */
   private def prunedFiles(spark: org.apache.spark.sql.SparkSession,
       manifestPath: String, lo: Column, hi: Column): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = graft.GraftSession.hadoopConf(spark)
     val driverSide = for {
       l <- literalOf(lo)
       h <- literalOf(hi)
@@ -220,7 +221,7 @@ object Layout {
     * fallback. */
   private def manifestFiles(spark: org.apache.spark.sql.SparkSession,
       manifestPath: String): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = graft.GraftSession.hadoopConf(spark)
     ManifestIo.readRows(conf, manifestPath)
       .flatMap(rows => scala.util.Try(
         rows.map(_("file").asInstanceOf[String])).toOption)
@@ -237,7 +238,7 @@ object Layout {
     * and any commit republishes). */
   private def republishManifest(spark: org.apache.spark.sql.SparkSession,
       path: String, fromVersion: Long): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = graft.GraftSession.hadoopConf(spark)
     val src = new org.apache.hadoop.fs.Path(s"$path/_zonemap_v/$fromVersion")
     val dst = new org.apache.hadoop.fs.Path(s"$path/_zonemap")
     val tmp = new org.apache.hadoop.fs.Path(s"$path/_zonemap__publishing")
@@ -249,13 +250,22 @@ object Layout {
       throw new java.io.IOException(s"could not publish $dst")
   }
 
+  /** A pruned scan of the dataset at `path` over `files`, or an empty
+    * frame of the dataset's schema when no file survives pruning. */
+  private def prunedRead(spark: org.apache.spark.sql.SparkSession,
+      path: String, files: Seq[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        Tables.readParquet(spark, Seq(path)).schema)
+    else Tables.readParquet(spark, files)
+
   /** Data files of a flat parquet dir, rendered as path URIs (the
     * same rendering [[footerManifest]] and `input_file_name()` use,
     * so manifest strings stay set-comparable). Metadata-scale. */
   private def listDataFiles(spark: org.apache.spark.sql.SparkSession,
       path: String): Set[String] = {
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = hPath.getFileSystem(graft.GraftSession.hadoopConf(spark))
     fs.listStatus(hPath)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toUri.toString).toSet
@@ -332,7 +342,7 @@ object Layout {
   def zoneMapVersions(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Long] = {
     val vRoot = new org.apache.hadoop.fs.Path(s"$path/_zonemap_v")
-    val fs = vRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = vRoot.getFileSystem(graft.GraftSession.hadoopConf(spark))
     if (!fs.exists(vRoot)) Seq.empty
     else fs.listStatus(vRoot).filter(_.isDirectory)
       .flatMap(d => scala.util.Try(d.getPath.getName.toLong).toOption)
@@ -354,7 +364,7 @@ object Layout {
   def readZoneMappedAsOf(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Long): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(graft.GraftSession.hadoopConf(spark))
     val vDir = new org.apache.hadoop.fs.Path(s"$path/_zonemap_v/$version")
     if (!fs.exists(vDir)) {
       val retained = zoneMapVersions(spark, path)
@@ -373,7 +383,7 @@ object Layout {
           "physically removed (vacuumed or externally deleted) — run " +
           "against the current table or a retained version " +
           s"(${zoneMapVersions(spark, path).mkString(", ")})")
-    spark.read.parquet(files.toIndexedSeq: _*)
+    Tables.readParquet(spark, files)
   }
 
   /** [[readZonePruned]] against a historical manifest version: zone
@@ -382,10 +392,7 @@ object Layout {
   def readZonePrunedAsOf(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Long, lo: Column, hi: Column): DataFrame = {
     val files = prunedFiles(spark, s"$path/_zonemap_v/$version", lo, hi)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.parquet(path).schema)
-    else spark.read.parquet(files.toIndexedSeq: _*)
+    prunedRead(spark, path, files)
   }
 
   /** Scan of `path` pruned by the zone map: only files whose
@@ -398,10 +405,7 @@ object Layout {
   def readZonePruned(spark: org.apache.spark.sql.SparkSession,
       path: String, lo: Column, hi: Column): DataFrame = {
     val files = prunedFiles(spark, s"$path/_zonemap", lo, hi)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.parquet(path).schema)
-    else spark.read.parquet(files.toIndexedSeq: _*)
+    prunedRead(spark, path, files)
   }
 
   /** Append a batch to a zone-mapped dataset and maintain the
@@ -450,7 +454,7 @@ object Layout {
       path: String, added: Seq[String], clusterCol: String,
       clusterType: org.apache.spark.sql.types.DataType,
       dest: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = graft.GraftSession.hadoopConf(spark)
     val done = (for {
       schema <- ManifestIo.manifestSchema(clusterType)
       newRows <- footerStats(spark, added, clusterCol, clusterType)
@@ -463,7 +467,7 @@ object Layout {
       ManifestIo.writeZoneRows(conf, dest, schema, merged)).isSuccess)
       .getOrElse(false)
     if (!done) {
-      val newStats = spark.read.parquet(added: _*)
+      val newStats = Tables.readParquet(spark, added)
         .groupBy(input_file_name().as("file"))
         .agg(min(col(clusterCol)).as("min_v"),
           max(col(clusterCol)).as("max_v"),
@@ -490,7 +494,7 @@ object Layout {
     df.repartition(numFiles)
       .write.mode("overwrite").parquet(path)
     val spark = df.sparkSession
-    spark.read.parquet(path)
+    Tables.readParquet(spark, Seq(path))
       .groupBy(input_file_name().as("file"))
       // hash the STRING rendering: xxhash64 is type-sensitive, and a
       // probe literal of a different width (int vs long) would
@@ -517,7 +521,7 @@ object Layout {
     val driverFiles = for {
       slot <- memberSlotOf(value)
       rows <- ManifestIo.readRows(
-        spark.sparkContext.hadoopConfiguration, s"$path/_memmap")
+        graft.GraftSession.hadoopConf(spark), s"$path/_memmap")
       files <- scala.util.Try(rows.collect {
         case r if r.get("slots").exists(
             _.asInstanceOf[Seq[Long]].contains(slot)) =>
@@ -530,10 +534,7 @@ object Layout {
           pmod(xxhash64(value.cast("string")), lit(65536L))))
         .select("file").collect().map(_.getString(0)).toSeq
     }
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        spark.read.parquet(path).schema)
-    else spark.read.parquet(files.toIndexedSeq: _*)
+    prunedRead(spark, path, files)
   }
 
   /** Small-file compaction: rewrite a parquet directory into
@@ -548,7 +549,7 @@ object Layout {
       targetBytes: Long): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = hPath.getFileSystem(graft.GraftSession.hadoopConf(spark))
     val entries = fs.listStatus(hPath)
     // A partitioned layout (key=value subdirs) would be silently
     // flattened by a read+rewrite — refuse it; compact leaf dirs.
@@ -565,7 +566,7 @@ object Layout {
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     val totalBytes = files.map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(path)
+    val df = Tables.readParquet(spark, Seq(path))
     val out = if (nFiles <= files.length) df.coalesce(nFiles)
       else df.repartition(nFiles)
     // Write beside, then swap via rename-aside: the published path is
@@ -603,7 +604,7 @@ object Layout {
       path: String, clusterCol: String, numFiles: Int): Long = {
     val current = manifestFiles(spark, s"$path/_zonemap")
     val before = listDataFiles(spark, path)
-    val currentDf = spark.read.parquet(current.toIndexedSeq: _*)
+    val currentDf = Tables.readParquet(spark, current)
     currentDf
       .repartitionByRange(numFiles, col(clusterCol))
       .sortWithinPartitions(clusterCol)
@@ -634,7 +635,7 @@ object Layout {
     if (versions.size <= keepLast) return 0
     val (dropped, retained) = versions.splitAt(versions.size - keepLast)
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = hPath.getFileSystem(graft.GraftSession.hadoopConf(spark))
     // per-version driver-side manifest reads (Spark fallback inside)
     // — manifests are one row per file, metadata-scale
     def filesOf(vs: Seq[Long]): Set[String] =

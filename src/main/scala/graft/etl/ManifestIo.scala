@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -64,7 +65,7 @@ private[etl] object ManifestIo {
       val rows = Vector.newBuilder[Row]
       files.foreach { f =>
         val in = HadoopInputFile.fromPath(f.getPath, conf)
-        val reader = ParquetFileReader.open(in)
+        val reader = ParquetFileReader.open(in, HadoopReadOptions.builder(conf).build())
         try {
           val schema = reader.getFooter.getFileMetaData.getSchema
           val io = new ColumnIOFactory().getColumnIO(schema)

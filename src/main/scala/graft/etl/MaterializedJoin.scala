@@ -80,7 +80,7 @@ object MaterializedJoin {
     new org.apache.hadoop.fs.Path(s"$path/_commits")
 
   private def fs(spark: SparkSession, path: String) =
-    commitsPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    commitsPath(path).getFileSystem(graft.GraftSession.hadoopConf(spark))
 
   /** Highest committed epoch, -1 if none (also the marker that a
     * path uses the epoch layout at all). */

@@ -212,7 +212,7 @@ object Mv {
     * roots never linger in the pre-screen set. */
   def prune(): Unit = {
     val conf = SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration)
+      .map(graft.GraftSession.hadoopConf)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
     registry.keys.foreach { key =>
       registry.get(key).foreach { e =>
@@ -232,7 +232,7 @@ object Mv {
   private def existsHadoop(spark: SparkSession, p: String): Boolean = {
     try {
       val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
+      hp.getFileSystem(graft.GraftSession.hadoopConf(spark)).exists(hp)
     } catch { case NonFatal(_) => false }
   }
 

@@ -1,7 +1,13 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.ParquetBridge
 import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table access with schema normalization.
@@ -25,12 +31,13 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZT
   *     applies to the same file.
   *   - `timestamp[us]` adjusted to UTC: already TimestampType; untouched.
   *
-  * Every source read goes through [[parquetFile]], which infers a
+  * Every source read goes through [[parquetFile]], which learns a
   * single-file source's schema once per file version. Spark's own
-  * inference runs a one-task job that reads a footer; a gate that reads
-  * the same unchanged file again reuses the schema that job found, the
-  * way a table format keeps the schema in its metadata instead of
-  * re-deriving it from the data files.
+  * inference runs a one-task job that reads a footer; [[footerSchema]]
+  * reads that footer on the driver instead, and a gate that reads the same
+  * unchanged file again reuses the schema, the way a table format keeps
+  * the schema in its metadata instead of re-deriving it from the data
+  * files.
   */
 object Tables {
 
@@ -64,30 +71,85 @@ object Tables {
         size() > MaxSchemas
     })
 
-  /** A plain file reads with the schema Spark inferred for the same file
-    * version; a directory, a missing path, a cache miss, a rewritten file
-    * or a changed conf infers as Spark does. */
+  /** A plain file reads with the schema learnt from its footer once per
+    * file version; a directory or a missing path reads as Spark infers
+    * it. */
   private def readRaw(spark: SparkSession, path: String): DataFrame =
     fileVersion(spark, path) match {
       case Some(v) =>
-        Option(schemas.get(v)) match {
-          case Some(s) => spark.read.schema(s).parquet(path)
-          case None =>
-            val df = spark.read.parquet(path)
-            schemas.put(v, df.schema)
-            df
+        val s = Option(schemas.get(v)).getOrElse {
+          val s = footerSchema(spark, Seq(path))
+            .getOrElse(spark.read.parquet(path).schema)
+          schemas.put(v, s)
+          s
         }
+        spark.read.schema(s).parquet(path)
       case None => spark.read.parquet(path)
     }
 
   private def fileVersion(spark: SparkSession,
       path: String): Option[FileVersion] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = new Path(path)
+    scala.util.Try(p.getFileSystem(graft.GraftSession.hadoopConf(spark))
       .getFileStatus(p)).toOption.filter(_.isFile).map { st =>
       FileVersion(st.getPath.toString, st.getLen, st.getModificationTime,
         spark.conf.getAll.filter { case (k, _) => schemaConf(k) })
     }
+  }
+
+  /** `spark.read.parquet(paths: _*)` with the schema [[footerSchema]]
+    * learns on the driver, so no inference job runs. */
+  def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** The schema `spark.read.parquet(paths: _*)` infers, from the one
+    * footer Spark's non-merged inference reads, read on the driver and
+    * converted by Spark's own code. That footer is the first summary
+    * file, else the first data file by path, among the files `paths` name
+    * and the files directly in the directories they name (hidden names
+    * skipped, as Spark's file index skips them). None, for the caller to
+    * let Spark infer, under schema merging, for a directory with a
+    * visible subdirectory (a partitioned or nested layout), or when
+    * anything about the paths or the footer surprises. */
+  def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean) None
+    else scala.util.Try {
+      val conf = graft.GraftSession.hadoopConf(spark)
+      val leaves = paths.flatMap { p =>
+        val hp = new Path(p)
+        val fs = hp.getFileSystem(conf)
+        val st = fs.getFileStatus(hp)
+        if (st.isFile) Seq(st)
+        else fs.listStatus(hp).toSeq.filterNot(f => hidden(f.getPath.getName))
+      }.filterNot(f => hidden(f.getPath.getName))
+      if (leaves.exists(_.isDirectory)) None
+      else {
+        def named(n: String) = leaves.filter(_.getPath.getName == n)
+        val data = leaves.filterNot(f => summary(f.getPath.getName))
+        (named("_common_metadata") ++ named("_metadata") ++
+            data.sortBy(_.getPath.toString).take(1)).headOption
+          .flatMap(f => ParquetBridge.schema(spark, footer(conf, f)))
+      }
+    }.toOption.flatten
+
+  private def summary(name: String): Boolean =
+    name == "_common_metadata" || name == "_metadata"
+
+  /** A name Spark's file index skips (`InMemoryFileIndex`'s rule). */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  private def footer(conf: org.apache.hadoop.conf.Configuration,
+      f: FileStatus): Footer = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+      HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try new Footer(f.getPath, reader.getFooter) finally reader.close()
   }
 
   /** Canonical event-time normalization: rewrite `ts` (when present) from

@@ -54,23 +54,9 @@ private[streaming] object BoundedStream {
         drain(warm)
         warm
       case None =>
-        // The checkpoint file manager is the dominant per-run cost on
-        // local filesystems (measured in BASELINE.md "Round-16:
-        // streaming-query startup — the checkpoint file manager"): the
-        // FileContext-based DEFAULT pays roughly 2× the metadata-op cost
-        // of Spark's own FileSystem-based alternative for the
-        // offset/commit/state-delta log writes every micro-batch commits
-        // (a minimal session-window run drops 1.6 → 0.8 s with nothing
-        // else changed). Both managers implement the same rename-based
-        // atomic commit protocol; Spark itself falls back to the
-        // FileSystem-based one wherever FileContext is unavailable, so
-        // this is a supported production posture, not a bench trick.
-        // Every kill-and-resume gate still proves checkpoint recovery
-        // end-to-end against the unchanged oracles.
+        // the checkpoint file manager is one of GraftSession.StorageConfs,
+        // which every child carries
         val s = graft.GraftSession.child(spark,
-          "spark.sql.streaming.checkpointFileManagerClass" ->
-            ("org.apache.spark.sql.execution.streaming.checkpointing." +
-              "FileSystemBasedCheckpointFileManager"),
           "spark.sql.shuffle.partitions" -> partitions.toString,
           "spark.sql.streaming.noDataMicroBatches.enabled" ->
             noDataBatches.toString)

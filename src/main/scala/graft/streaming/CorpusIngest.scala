@@ -112,7 +112,7 @@ object CorpusIngest {
       cfg: CorpusClean.Config = CorpusClean.Config()): Long = {
     val spark = batch.sparkSession
     val fs = new Path(corpusRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(graft.GraftSession.hadoopConf(spark))
     val corpusDir = s"$corpusRoot/batch_id=$batchId"
     val myMarker = new Path(indexPath, s"_batch_$batchId")
     if (fs.exists(new Path(corpusDir, "_SUCCESS")) && fs.exists(myMarker))

@@ -241,7 +241,7 @@ object EventStream {
   def landBatch(batch: DataFrame, batchId: Long, root: String): Boolean = {
     val dir = s"$root/batch_id=$batchId"
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
+      graft.GraftSession.hadoopConf(batch.sparkSession))
     val committed = fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
     if (!committed) batch.write.mode("overwrite").parquet(dir)
     !committed

@@ -14,8 +14,7 @@ class FactBucketsSpec extends SparkSpec {
     val bucketed = graft.ops.Graph.tradeEdges(spark, dir)
       .orderBy("src", "dst").collect().map(_.toSeq)
     // fallback session: bucketing disabled -> the pre-r16 plan
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.graph.bucketedFacts", "false")
+    val s2 = GraftSession.child(spark, "spark.graft.graph.bucketedFacts" -> "false")
     val raw = graft.ops.Graph.tradeEdges(s2, dir)
       .orderBy("src", "dst").collect().map(_.toSeq)
     assert(raw.nonEmpty && bucketed.toSeq == raw.toSeq)
@@ -31,9 +30,9 @@ class FactBucketsSpec extends SparkSpec {
     // at sf0.001 the planner correctly broadcasts the tiny orders side
     // (also exchange-free); the claim under test is the BIG-BIG
     // posture, so force the non-broadcast path the 100× decade takes
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    val s2 = GraftSession.child(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
     val (li, od) = graft.etl.FactBuckets.orderkeyFacts(s2, dir)
     val joined = li.join(od, col("l_orderkey") === col("o_orderkey"))
     joined.write.format("noop").mode("overwrite").save()
@@ -52,8 +51,7 @@ class FactBucketsSpec extends SparkSpec {
   test("q238 over the bucketed layout matches the raw plan's rows") {
     val bucketed = SparkEntry.queries("q238_degree_dist")(spark, dir)
       .collect().map(_.toSeq)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.graph.bucketedFacts", "false")
+    val s2 = GraftSession.child(spark, "spark.graft.graph.bucketedFacts" -> "false")
     val raw = SparkEntry.queries("q238_degree_dist")(s2, dir)
       .collect().map(_.toSeq)
     assert(raw.nonEmpty && bucketed.toSeq == raw.toSeq)

@@ -22,7 +22,12 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.codegen.cache.maxEntries" -> "10000",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
-      "spark.ui.enabled" -> "false")
+      "spark.ui.enabled" -> "false",
+      // GraftSession.StorageConfs: the Hadoop keys ride in as spark.hadoop.*
+      "spark.hadoop.fs.file.impl" -> "graft.etl.LocalFs",
+      "spark.hadoop.fs.file.impl.disable.cache" -> "true",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
     val got = want.keys.map(k => k -> spark.conf.get(k)).toMap
     assert(got == want)
     assert(spark.sparkContext.master == "local[4]")
@@ -47,6 +52,47 @@ class GraftSessionSpec extends SparkSpec {
     for (k <- Seq("spark.sql.legacy.parquet.nanosAsLong",
         "spark.sql.legacy.bucketedTableScan.outputOrdering"))
       assert(c.conf.get(k) == "true", k)
+  }
+
+  private def fileFs(c: org.apache.hadoop.conf.Configuration) =
+    new org.apache.hadoop.fs.Path("file:///").getFileSystem(c)
+
+  test("file:// is graft's LocalFs on every engine session and in hadoopConf") {
+    assert(fileFs(spark.sessionState.newHadoopConf()).isInstanceOf[graft.etl.LocalFs])
+    assert(fileFs(spark.sparkContext.hadoopConfiguration).isInstanceOf[graft.etl.LocalFs])
+    val c = GraftSession.child(spark)
+    assert(fileFs(c.sessionState.newHadoopConf()).isInstanceOf[graft.etl.LocalFs])
+    // a session whose context lacks the storage keys (one graft did not
+    // build): a child still gets LocalFs, and so does graft's own I/O
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = GraftSession.StorageConfs.map(_._1).filter(k => hc.get(k) != null)
+    val saved = keys.map(k => k -> hc.get(k))
+    try {
+      keys.foreach(hc.unset)
+      val bare = spark.newSession()
+      assert(!fileFs(bare.sessionState.newHadoopConf()).isInstanceOf[graft.etl.LocalFs])
+      assert(fileFs(GraftSession.child(bare).sessionState.newHadoopConf())
+        .isInstanceOf[graft.etl.LocalFs])
+      assert(fileFs(GraftSession.hadoopConf(bare)).isInstanceOf[graft.etl.LocalFs])
+    } finally saved.foreach { case (k, v) => hc.set(k, v) }
+  }
+
+  test("src/main takes its Hadoop conf from GraftSession.hadoopConf") {
+    // split so this spec is not itself a match for a grep over src/
+    val needle = "hadoop" + "Configuration"
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(p => root.relativize(p).toString == "graft/GraftSession.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains(needle) &&
+              !Seq("*", "/*", "//").exists(line.trim.startsWith) =>
+            s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+        }
+      }.toSeq.sorted
+    assert(hits.isEmpty)
   }
 
   test("shuffle partitions follow the master's cores") {

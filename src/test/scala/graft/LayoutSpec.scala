@@ -152,6 +152,29 @@ class LayoutSpec extends SparkSpec {
     graft.etl.Scratch.remove(dir)
   }
 
+  test("zone-mapped reads take the schema Spark infers, at both versions") {
+    val dir = graft.etl.Scratch.dir("schema")
+    val lo = (1 to 3000).map(i => (i.toLong, s"v$i", i * 0.5)).toDF("k", "v", "d")
+    val hi = (3001 to 5000).map(i => (i.toLong, s"v$i", i * 0.5)).toDF("k", "v", "d")
+    Layout.writeZoneMapped(lo, dir, "k", numFiles = 4)
+    Layout.appendZoneMapped(hi, dir, "k", numFiles = 4)
+    for (v <- Seq(1L, 2L)) {
+      val asOf = Layout.readZoneMappedAsOf(spark, dir, v)
+      val files = asOf.inputFiles.toSeq
+      assert(files.size == 4 * v)
+      val inferred = spark.read.parquet(files: _*).schema
+      assert(asOf.schema == inferred)
+      assert(graft.etl.Tables.footerSchema(spark, files).contains(inferred))
+      assert(Layout.readZonePrunedAsOf(spark, dir, v, lit(10L), lit(20L)).schema == inferred)
+    }
+    // the dataset root: manifest dirs, _SUCCESS and .crc files skipped
+    val root = spark.read.parquet(dir).schema
+    assert(graft.etl.Tables.footerSchema(spark, Seq(dir)).contains(root))
+    val none = Layout.readZonePruned(spark, dir, lit(-10L), lit(-5L))
+    assert(none.schema == root && none.count() == 0)
+    graft.etl.Scratch.remove(dir)
+  }
+
   test("compactZoneMapped preserves history; vacuum reclaims it and refuses loudly") {
     val dir = graft.etl.Scratch.dir("vac")
     val p1 = (1 to 3000).map(i => (i.toLong, s"v$i")).toDF("k", "v")

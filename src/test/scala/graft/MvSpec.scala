@@ -112,8 +112,7 @@ class MvSpec extends SparkSpec {
     val dir = factDir()
     val mvPath = graft.etl.Scratch.dir("mv")
     Mv.register(aggOf(dir), mvPath)
-    val s2 = spark.newSession()
-    GraftExtensions.register(s2)
+    val s2 = GraftSession.child(spark)
     val q2 = s2.read.parquet(dir).groupBy("g")
       .agg(sum("v").as("sv"), count(lit(1)).as("n"))
     assert(q2.queryExecution.optimizedPlan.toString.contains("Aggregate"),

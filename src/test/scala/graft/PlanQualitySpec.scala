@@ -250,9 +250,9 @@ class PlanQualitySpec extends SparkSpec {
       .select("id", "v_w").collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     val wantOut = graft.ops.Quality.robustOutliers(hi, "g", "v")
       .select("g", "n", "n_outliers").collect().map(_.toSeq).toSet
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    val s2 = GraftSession.child(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
     val hi2 = {
       import s2.implicits._
       (1 to 5000).map(i => (s"g$i", (i % 97).toDouble, i.toLong))
@@ -294,14 +294,14 @@ class PlanQualitySpec extends SparkSpec {
     //     groupBy on the join key makes the split non-free (it breaks
     //     the reusable partitioning) and AQE declines it without
     //     forceOptimizeSkewedJoin.
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "32")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    s2.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    s2.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-    s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
+    val s2 = GraftSession.child(spark,
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB")
     val li = graft.etl.Tables.table(s2, "/root/testdata/sf0.1", "lineitem")
       .select(when(col("l_partkey") < 100, col("l_partkey"))
         .otherwise(lit(0L)).as("k"), col("l_quantity").as("qty"))
@@ -327,9 +327,7 @@ class PlanQualitySpec extends SparkSpec {
     // assert on the STATIC planner (AQE resolves its reuse at runtime
     // behind opaque stage references): with adaptive off, ReuseExchange
     // must collapse every consumer's copy of the entries exchange
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    GraftExtensions.register(s2)
+    val s2 = GraftSession.child(spark, "spark.sql.adaptive.enabled" -> "false")
     val plan = SparkEntry.queries("q112_hybrid_rrf")(s2, dir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("ReusedExchange"),

@@ -108,7 +108,7 @@ class TablesSpec extends SparkSpec {
     writeSingleFile((1L to 100L).map(i => (i, s"s$i", i * 0.5))
       .toDF("id", "s", "v"), s"$dir/t.parquet")
     val (first, firstJobs) = withJobCount(graft.etl.Tables.table(spark, dir, "t"))
-    assert(firstJobs >= 1, "the first read infers the schema with a job")
+    assert(firstJobs == 0, s"first read ran $firstJobs job(s)")
     val (second, secondJobs) =
       withJobCount(graft.etl.Tables.table(spark, dir, "t"))
     assert(secondJobs == 0, s"second read ran $secondJobs job(s)")
@@ -132,16 +132,14 @@ class TablesSpec extends SparkSpec {
       .collect().toSeq == Seq("e3"))
   }
 
-  test("the cached schema follows spark.sql.parquet.binaryAsString") {
+  /** `dir/t.parquet` from a non-Spark writer: a plain BINARY column with
+    * no string annotation and no Spark schema in the footer, so the
+    * inferred type depends on binaryAsString. */
+  private def writeBinaryFile(dir: String): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroup
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
-    import org.apache.spark.sql.types.{BinaryType, StringType}
-    // a non-Spark writer: a plain BINARY column with no string
-    // annotation and no Spark schema in the footer, so the inferred
-    // type depends on binaryAsString
-    val dir = java.nio.file.Files.createTempDirectory("tables-binary").toString
     val schema = MessageTypeParser.parseMessageType(
       "message t { required int64 id; required binary b; }")
     val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
@@ -154,6 +152,23 @@ class TablesSpec extends SparkSpec {
       g.add("b", s"b$i")
       w.write(g)
     } finally w.close()
+  }
+
+  /** `body` with `key` set to `value` on the shared session, then the
+    * prior setting restored. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("the cached schema follows spark.sql.parquet.binaryAsString") {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val dir = java.nio.file.Files.createTempDirectory("tables-binary").toString
+    writeBinaryFile(dir)
     val key = "spark.sql.parquet.binaryAsString"
     val prior = spark.conf.getOption(key)
     def bType = graft.etl.Tables.table(spark, dir, "t").schema("b").dataType
@@ -172,6 +187,39 @@ class TablesSpec extends SparkSpec {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
     }
+  }
+
+  test("a footer read on the driver gives the schema Spark's inference job finds") {
+    import graft.etl.Tables.footerSchema
+    def same(paths: String*): Unit = {
+      val (got, jobs) = withJobCount(footerSchema(spark, paths))
+      assert(jobs == 0, s"$paths: $jobs job(s)")
+      assert(got.contains(spark.read.parquet(paths: _*).schema), paths)
+    }
+    val sf = new java.io.File("/root/testdata/sf0.001")
+    val tables = sf.list().toSeq.filter(_.endsWith(".parquet")).sorted
+    assert(tables.size == 10, tables)
+    tables.foreach(t => same(s"$sf/$t"))
+    same("fixtures/nanos/events.parquet")
+    val bin = java.nio.file.Files.createTempDirectory("tables-footer-bin").toString
+    writeBinaryFile(bin)
+    for (v <- Seq("true", "false"))
+      withConf("spark.sql.parquet.binaryAsString", v)(same(s"$bin/t.parquet"))
+    // a Spark-written directory: _SUCCESS and .crc files skipped, first
+    // part file by path read
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-footer-dir").toString
+    (1L to 40L).map(i => (i, s"s$i")).toDF("id", "s").repartition(4)
+      .write.mode("overwrite").parquet(dir)
+    same(dir)
+    // what the driver cannot answer exactly is left to Spark
+    assert(withConf("spark.sql.parquet.mergeSchema", "true")(
+      footerSchema(spark, Seq(dir))).isEmpty)
+    val parted = java.nio.file.Files.createTempDirectory("tables-footer-part").toString
+    (1L to 10L).map(i => (i, i % 2)).toDF("id", "p")
+      .write.mode("overwrite").partitionBy("p").parquet(parted)
+    assert(footerSchema(spark, Seq(parted)).isEmpty)
+    assert(footerSchema(spark, Seq(s"$dir/missing")).isEmpty)
   }
 
   test("a directory source is inferred on every read and sees new files") {
