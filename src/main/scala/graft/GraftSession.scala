@@ -115,9 +115,10 @@ object GraftSession {
     * `parent` (own SQL conf, temp views and functions over the same
     * SparkContext and its engine confs) that starts from every setting
     * `parent` was given after birth, with graft's extensions registered,
-    * [[StorageConfs]] and then `confs` set on top; `parent` is not touched. Per-run state (a
-    * gate's own conf, the views its SQL names) goes here, so a gate run
-    * on a child plans under that child's settings.
+    * [[StorageConfs]] and then `confs` set on top; `parent` is not
+    * touched. Per-run state (a gate's own conf, the views its SQL names)
+    * goes here, so a gate run on a child plans under that child's
+    * settings.
     *
     * Spark's per-session artifact isolation is off on every child. An
     * isolated session runs its jobs under its own artifact state and
