@@ -122,8 +122,7 @@ object Tables {
         val hp = new Path(p)
         val fs = hp.getFileSystem(conf)
         val st = fs.getFileStatus(hp)
-        if (st.isFile) Seq(st)
-        else fs.listStatus(hp).toSeq.filterNot(f => hidden(f.getPath.getName))
+        if (st.isFile) Seq(st) else fs.listStatus(hp).toSeq
       }.filterNot(f => hidden(f.getPath.getName))
       if (leaves.exists(_.isDirectory)) None
       else {
