@@ -16,7 +16,11 @@ import graft.streaming.WarmRuns
   * creates gets the mode Hadoop's stock local file system gives it. */
 class LocalFsSpec extends SparkSpec {
 
-  /** The `jdk.ProcessStart` events `body` caused, as "command <- frames". */
+  /** The `jdk.ProcessStart` events while `body` ran, as "command <-
+    * frames". Left out: Spark's `rm -rf` of the artifact directory of a
+    * session the garbage collector reclaimed (`ArtifactManager`'s
+    * cleaner), which runs whenever a collection happens to reclaim an
+    * earlier session, not because of anything `body` does. */
   private def processStarts(body: => Unit): Seq[String] = {
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
@@ -27,9 +31,9 @@ class LocalFsSpec extends SparkSpec {
       rec.dump(out)
       jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq.map { e =>
         val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
-          .take(12).map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
         s"${e.getString("command")} <- ${frames.mkString(" < ")}"
-      }
+      }.filterNot(_.contains("ArtifactManager$StateCleanupRunner"))
     } finally {
       rec.close()
       Files.deleteIfExists(out)
