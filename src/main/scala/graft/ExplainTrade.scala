@@ -17,7 +17,7 @@ object ExplainTrade {
       val s = GraftSession.child(spark,
         ("spark.graft.graph.bucketedFacts" -> bucketed.toString) +: noBroadcast: _*)
       val df = graft.ops.Graph.tradeEdges(s, dir)
-      df.write.format("noop").mode("overwrite").save()
+      GraftSession.write(df).format("noop").mode("overwrite").save()
       val plan = df.queryExecution.executedPlan.toString
       val orderkeyEx = "hashpartitioning\\((l|o)_orderkey".r
         .findAllIn(plan).length

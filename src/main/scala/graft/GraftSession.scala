@@ -1,18 +1,24 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
 /** The one place an engine session is built and its state is set. Every
   * main and the test suite get the confs `Bench` times, so a correctness
   * check runs the engine `Bench` measures (the perfbench harness still
-  * builds its own session, without the two legacy parquet confs and the
-  * storage confs); a caller adds only its deployment confs (master,
-  * classpath, checkpoint mode, scratch dirs, `etl.ObjectStore.confs`) at
-  * build. graft's SQL functions, optimizer rules and planner strategy are
-  * registered on every session handed out, and graft's storage settings
-  * ([[StorageConfs]]) hold on every one and in graft's own Hadoop I/O
-  * ([[hadoopConf]]); no gate or operator changes its session. */
+  * builds its own session, without the two legacy parquet confs); a
+  * caller adds only its deployment confs (master, classpath, checkpoint
+  * mode, scratch dirs, `etl.ObjectStore.confs`) at build. graft's SQL
+  * functions, optimizer rules and planner strategy are registered on
+  * every session handed out, and graft's storage settings
+  * ([[StorageConfs]]) hold on every one, in graft's own Hadoop I/O
+  * ([[hadoopConf]]) and in every write graft starts ([[write]]), whichever
+  * session it runs on; no gate or operator changes its session. Two
+  * `file://` paths on a session graft did not build keep that session's
+  * stock file system: reliable-mode RDD checkpoints
+  * (`spark.graft.checkpoint.mode=reliable`, which write through the
+  * context's Hadoop conf) and Spark's own deletion of each collected
+  * session's artifact directory. */
 object GraftSession {
 
   /** Cores the engine runs on: `$SPARK_GRAFT_CPUS`, else every core on
@@ -33,8 +39,9 @@ object GraftSession {
   /** graft's storage settings, the same on every engine session: the
     * context `create` builds carries them in its Hadoop conf, every
     * [[child]] sets them on itself (so a child of a session graft did not
-    * build gets them too), and [[hadoopConf]] applies them to graft's own
-    * driver-side Hadoop I/O.
+    * build gets them too), [[hadoopConf]] applies them to graft's own
+    * driver-side Hadoop I/O, and [[write]] carries the Hadoop keys into
+    * every write graft starts.
     *
     *  - `file://` is [[graft.etl.LocalFs]], which sets a created file's
     *    mode by syscall instead of a `chmod` process per file.
@@ -59,6 +66,10 @@ object GraftSession {
       ("org.apache.spark.sql.execution.streaming.checkpointing." +
         "FileSystemBasedCheckpointFileManager"))
 
+  /** [[StorageConfs]] split into Spark SQL confs and Hadoop keys. */
+  private val (sqlStorage, hadoopStorage) =
+    StorageConfs.partition(_._1.startsWith("spark."))
+
   /** The Hadoop conf graft's driver-side I/O on `spark`'s behalf uses:
     * the session's own (its context's Hadoop conf plus every setting the
     * session was given, such as a child's `fs.s3a.*` keys) with
@@ -68,6 +79,17 @@ object GraftSession {
     StorageConfs.foreach { case (k, v) => c.set(k, v) }
     c
   }
+
+  /** `df.write` with the Hadoop keys of [[StorageConfs]] as writer
+    * options, the one way `src/main` writes. Spark merges a writer's
+    * options into the Hadoop conf of that write, on the driver's commit
+    * and in every task, so the part files, their `.crc` sidecars and the
+    * committer's directories go through [[graft.etl.LocalFs]] even on a
+    * session graft did not build, which no setting of a session handed in
+    * reaches. A `saveAsTable` keeps them as the table's storage
+    * properties, which Spark then applies to the table's reads. */
+  def write(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(hadoopStorage.toMap)
 
   def create(): SparkSession = create(s"local[$cpus]")
 
@@ -102,8 +124,7 @@ object GraftSession {
       // Spark drops the claim by itself for a bucket with several files)
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.ui.enabled", "false")
-    val storage = StorageConfs.map { case (k, v) =>
-      (if (k.startsWith("spark.")) k else s"spark.hadoop.$k") -> v }
+    val storage = hadoopStorage.map { case (k, v) => s"spark.hadoop.$k" -> v } ++ sqlStorage
     val spark = (storage ++ confs).foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

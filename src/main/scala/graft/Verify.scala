@@ -11,7 +11,7 @@ object Verify {
     val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     SparkEntry.select(prefixes.toSeq).foreach { g =>
-      try g.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try GraftSession.write(g.build(spark, sfDir).coalesce(1)).mode("overwrite")
         .parquet(s"$outDir/${g.name}")
       catch { case e: Throwable =>
         System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")

@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions.col
   * which rows exist — and every consumer gate keeps its unchanged
   * from-base-tables DuckDB oracle.
   *
-  * Fallback: `spark.graft.graph.bucketedFacts=false` (or any build
-  * failure) returns the plain projections and the pre-r16 plan —
-  * spec'd for parity in FactBucketsSpec. */
+  * Fallback: `spark.graft.graph.bucketedFacts=false` returns the plain
+  * projections and the pre-r16 plan — spec'd for parity in
+  * FactBucketsSpec. A failed build fails the caller; it does not fall
+  * back. */
 object FactBuckets {
 
   /** Serializes builds so concurrent gates do not double-write. */
@@ -47,10 +48,7 @@ object FactBuckets {
     * JVM), the plain parquet projections otherwise — same rows either
     * way, only the physical partitioning differs. */
   def orderkeyFacts(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    if (enabled(s)) {
-      try orderkeyBucketed(s, dir)
-      catch { case scala.util.control.NonFatal(_) => raw(s, dir) }
-    } else raw(s, dir)
+    if (enabled(s)) orderkeyBucketed(s, dir) else raw(s, dir)
 
   private def raw(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     (Tables.table(s, dir, "lineitem").select("l_orderkey", "l_suppkey"),
@@ -89,8 +87,8 @@ object FactBuckets {
   private def writeBucketed(s: SparkSession, df: DataFrame, key: String,
       path: String, name: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $name")
-    df.repartition(Buckets, col(key))
-      .write.bucketBy(Buckets, key).sortBy(key)
+    graft.GraftSession.write(df.repartition(Buckets, col(key)))
+      .bucketBy(Buckets, key).sortBy(key)
       .option("path", path).mode("overwrite").saveAsTable(name)
   }
 

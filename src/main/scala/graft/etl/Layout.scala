@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
+import graft.GraftSession
+
 /** Data-layout levers for scan pruning at 100 TB.
   *
   * Parquet/scan pruning works off per-file (and per-rowgroup) min/max
@@ -49,7 +51,7 @@ object Layout {
       case _ => false
     }
     if (!eligible) return None
-    val conf = graft.GraftSession.hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     val rows = scala.util.Try {
       files.map { f =>
         val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
@@ -103,6 +105,17 @@ object Layout {
     rows
   }
 
+  /** `df` as one file at `dest`, replacing what is there. */
+  private def writeOneFile(df: DataFrame, dest: String): Unit =
+    GraftSession.write(df.coalesce(1)).mode("overwrite").parquet(dest)
+
+  /** `df` range-clustered on `clusterCol` into ~`numFiles` files at
+    * `path`, each sorted on it. */
+  private def writeClustered(df: DataFrame, path: String, clusterCol: String,
+      numFiles: Int, mode: String): Unit =
+    GraftSession.write(df.repartitionByRange(numFiles, col(clusterCol))
+      .sortWithinPartitions(clusterCol)).mode(mode).parquet(path)
+
   /** Commit a manifest version for `files`: footer stats written
     * driver-side as one parquet file when the cluster type is
     * footer-exact ([[ManifestIo]] — zero Spark jobs, the table-format
@@ -111,7 +124,7 @@ object Layout {
       files: Seq[String], clusterCol: String,
       clusterType: org.apache.spark.sql.types.DataType,
       dest: String): Unit = {
-    val conf = graft.GraftSession.hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     val done = (for {
       schema <- ManifestIo.manifestSchema(clusterType)
       rows <- footerStats(spark, files, clusterCol, clusterType)
@@ -119,13 +132,11 @@ object Layout {
       ManifestIo.writeZoneRows(conf, dest, schema, rows)).isSuccess)
       .getOrElse(false)
     if (!done)
-      Tables.readParquet(spark, files)
+      writeOneFile(Tables.readParquet(spark, files)
         .groupBy(input_file_name().as("file"))
         .agg(min(col(clusterCol)).as("min_v"),
           max(col(clusterCol)).as("max_v"),
-          count(lit(1)).as("n_rows"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(dest)
+          count(lit(1)).as("n_rows")), dest)
   }
 
   /** Exact filesystem copy of one manifest dir to another (backfilling
@@ -134,7 +145,7 @@ object Layout {
     * is literally "as first written". */
   private def copyManifestDir(spark: org.apache.spark.sql.SparkSession,
       from: String, to: String): Unit = {
-    val conf = graft.GraftSession.hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     val src = new org.apache.hadoop.fs.Path(from)
     val dst = new org.apache.hadoop.fs.Path(to)
     val fs = dst.getFileSystem(conf)
@@ -183,7 +194,7 @@ object Layout {
     * SQL predicate's null semantics exclude them. */
   private def prunedFiles(spark: org.apache.spark.sql.SparkSession,
       manifestPath: String, lo: Column, hi: Column): Seq[String] = {
-    val conf = graft.GraftSession.hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     val driverSide = for {
       l <- literalOf(lo)
       h <- literalOf(hi)
@@ -221,7 +232,7 @@ object Layout {
     * fallback. */
   private def manifestFiles(spark: org.apache.spark.sql.SparkSession,
       manifestPath: String): Seq[String] = {
-    val conf = graft.GraftSession.hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     ManifestIo.readRows(conf, manifestPath)
       .flatMap(rows => scala.util.Try(
         rows.map(_("file").asInstanceOf[String])).toOption)
@@ -238,7 +249,7 @@ object Layout {
     * and any commit republishes). */
   private def republishManifest(spark: org.apache.spark.sql.SparkSession,
       path: String, fromVersion: Long): Unit = {
-    val conf = graft.GraftSession.hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     val src = new org.apache.hadoop.fs.Path(s"$path/_zonemap_v/$fromVersion")
     val dst = new org.apache.hadoop.fs.Path(s"$path/_zonemap")
     val tmp = new org.apache.hadoop.fs.Path(s"$path/_zonemap__publishing")
@@ -265,7 +276,7 @@ object Layout {
   private def listDataFiles(spark: org.apache.spark.sql.SparkSession,
       path: String): Set[String] = {
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(graft.GraftSession.hadoopConf(spark))
+    val fs = hPath.getFileSystem(GraftSession.hadoopConf(spark))
     fs.listStatus(hPath)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toUri.toString).toSet
@@ -306,13 +317,12 @@ object Layout {
     def norm(c: Column, lo: Double, hi: Double): Column =
       ((c.cast("double") - lo) / math.max(hi - lo, 1e-300)
         * ((1 << 20) - 1)).cast("long")
-    df.withColumn("__z", zOrder2(
+    GraftSession.write(df.withColumn("__z", zOrder2(
         norm(col(colA), r.getDouble(0), r.getDouble(1)),
         norm(col(colB), r.getDouble(2), r.getDouble(3))))
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
+      .drop("__z")).mode("overwrite").parquet(path)
   }
 
   /** Write `df` range-clustered on `clusterCol` into ~`numFiles`
@@ -326,9 +336,7 @@ object Layout {
     * plus one file-grain aggregation over the written data. */
   def writeZoneMapped(df: DataFrame, path: String, clusterCol: String,
       numFiles: Int): Unit = {
-    df.repartitionByRange(numFiles, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.mode("overwrite").parquet(path)
+    writeClustered(df, path, clusterCol, numFiles, "overwrite")
     val spark = df.sparkSession
     val written = listDataFiles(spark, path).toSeq
     commitManifest(spark, written, clusterCol,
@@ -342,7 +350,7 @@ object Layout {
   def zoneMapVersions(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Long] = {
     val vRoot = new org.apache.hadoop.fs.Path(s"$path/_zonemap_v")
-    val fs = vRoot.getFileSystem(graft.GraftSession.hadoopConf(spark))
+    val fs = vRoot.getFileSystem(GraftSession.hadoopConf(spark))
     if (!fs.exists(vRoot)) Seq.empty
     else fs.listStatus(vRoot).filter(_.isDirectory)
       .flatMap(d => scala.util.Try(d.getPath.getName.toLong).toOption)
@@ -364,7 +372,7 @@ object Layout {
   def readZoneMappedAsOf(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Long): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(graft.GraftSession.hadoopConf(spark))
+      .getFileSystem(GraftSession.hadoopConf(spark))
     val vDir = new org.apache.hadoop.fs.Path(s"$path/_zonemap_v/$version")
     if (!fs.exists(vDir)) {
       val retained = zoneMapVersions(spark, path)
@@ -421,9 +429,7 @@ object Layout {
       numFiles: Int): Unit = {
     val spark = df.sparkSession
     val before = listDataFiles(spark, path)
-    df.repartitionByRange(numFiles, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.mode("append").parquet(path)
+    writeClustered(df, path, clusterCol, numFiles, "append")
     val added = (listDataFiles(spark, path) -- before).toSeq
     // an empty delta can legitimately commit zero part files — a
     // no-op append must not fail the job (and has no manifest delta)
@@ -454,7 +460,7 @@ object Layout {
       path: String, added: Seq[String], clusterCol: String,
       clusterType: org.apache.spark.sql.types.DataType,
       dest: String): Unit = {
-    val conf = graft.GraftSession.hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     val done = (for {
       schema <- ManifestIo.manifestSchema(clusterType)
       newRows <- footerStats(spark, added, clusterCol, clusterType)
@@ -472,9 +478,7 @@ object Layout {
         .agg(min(col(clusterCol)).as("min_v"),
           max(col(clusterCol)).as("max_v"),
           count(lit(1)).as("n_rows"))
-      spark.read.parquet(s"$path/_zonemap").unionByName(newStats)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(dest)
+      writeOneFile(spark.read.parquet(s"$path/_zonemap").unionByName(newStats), dest)
     }
   }
 
@@ -491,10 +495,9 @@ object Layout {
     * file. */
   def writeMemberMapped(df: DataFrame, path: String, keyCol: String,
       numFiles: Int): Unit = {
-    df.repartition(numFiles)
-      .write.mode("overwrite").parquet(path)
+    GraftSession.write(df.repartition(numFiles)).mode("overwrite").parquet(path)
     val spark = df.sparkSession
-    Tables.readParquet(spark, Seq(path))
+    writeOneFile(Tables.readParquet(spark, Seq(path))
       .groupBy(input_file_name().as("file"))
       // hash the STRING rendering: xxhash64 is type-sensitive, and a
       // probe literal of a different width (int vs long) would
@@ -502,9 +505,7 @@ object Layout {
       .agg(sort_array(collect_set(
           pmod(xxhash64(col(keyCol).cast("string")), lit(65536L))))
           .as("slots"),
-        count(lit(1)).as("n_rows"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_memmap")
+        count(lit(1)).as("n_rows")), s"$path/_memmap")
   }
 
   /** Scan of `path` pruned by the membership sketch: only files whose
@@ -521,7 +522,7 @@ object Layout {
     val driverFiles = for {
       slot <- memberSlotOf(value)
       rows <- ManifestIo.readRows(
-        graft.GraftSession.hadoopConf(spark), s"$path/_memmap")
+        GraftSession.hadoopConf(spark), s"$path/_memmap")
       files <- scala.util.Try(rows.collect {
         case r if r.get("slots").exists(
             _.asInstanceOf[Seq[Long]].contains(slot)) =>
@@ -549,7 +550,7 @@ object Layout {
       targetBytes: Long): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(graft.GraftSession.hadoopConf(spark))
+    val fs = hPath.getFileSystem(GraftSession.hadoopConf(spark))
     val entries = fs.listStatus(hPath)
     // A partitioned layout (key=value subdirs) would be silently
     // flattened by a read+rewrite — refuse it; compact leaf dirs.
@@ -577,7 +578,7 @@ object Layout {
       path.stripSuffix("/") + "__compacting")
     val aside = new org.apache.hadoop.fs.Path(
       path.stripSuffix("/") + "__precompact")
-    out.write.mode("overwrite").parquet(tmp.toString)
+    GraftSession.write(out).mode("overwrite").parquet(tmp.toString)
     if (fs.exists(aside)) fs.delete(aside, true)
     if (!fs.rename(hPath, aside))
       throw new java.io.IOException(s"compact: could not move $hPath aside")
@@ -605,10 +606,7 @@ object Layout {
     val current = manifestFiles(spark, s"$path/_zonemap")
     val before = listDataFiles(spark, path)
     val currentDf = Tables.readParquet(spark, current)
-    currentDf
-      .repartitionByRange(numFiles, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.mode("append").parquet(path)
+    writeClustered(currentDf, path, clusterCol, numFiles, "append")
     val added = (listDataFiles(spark, path) -- before).toSeq
     if (zoneMapVersions(spark, path).isEmpty)
       copyManifestDir(spark, s"$path/_zonemap", s"$path/_zonemap_v/1")
@@ -635,7 +633,7 @@ object Layout {
     if (versions.size <= keepLast) return 0
     val (dropped, retained) = versions.splitAt(versions.size - keepLast)
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(graft.GraftSession.hadoopConf(spark))
+    val fs = hPath.getFileSystem(GraftSession.hadoopConf(spark))
     // per-version driver-side manifest reads (Spark fallback inside)
     // — manifests are one row per file, metadata-scale
     def filesOf(vs: Seq[Long]): Set[String] =

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** INCREMENTALLY-maintained materialized view, wired into the
   * [[MvRewrite]] optimizer substitution — the composition of
   * [[MaterializedAgg]] (delta-bounded partial maintenance, never
@@ -64,15 +66,15 @@ object MaintainedMv {
     val p = Checkpoints.truncate(MaterializedAgg.partials(
       spark.read.parquet(baseDir), keys, valueCol, nBuckets))
     Par.run(
-      () => p.write.mode("overwrite").partitionBy("__bucket")
+      () => GraftSession.write(p).mode("overwrite").partitionBy("__bucket")
         .parquet(statePath),
       // the finalize shape MUST match MaterializedAgg.read (each key
       // lives in exactly one bucket, so partials are one row per key)
-      () => p.select((keys.map(col) :+ col("__cnt").as("n") :+
-          col("__sum").as("total") :+ col("__min").as("lo") :+
-          col("__max").as("hi") :+
-          (col("__sum") / col("__cnt")).as("mean")): _*)
-        .write.mode("overwrite").parquet(mvPath))
+      () => GraftSession.write(p.select((keys.map(col) :+
+          col("__cnt").as("n") :+ col("__sum").as("total") :+
+          col("__min").as("lo") :+ col("__max").as("hi") :+
+          (col("__sum") / col("__cnt")).as("mean")): _*))
+        .mode("overwrite").parquet(mvPath))
     Mv.registerExisting(viewOf(spark, baseDir, keys, valueCol), mvPath)
     Checkpoints.free(p)
   }
@@ -87,7 +89,7 @@ object MaintainedMv {
       statePath: String, mvPath: String, nBuckets: Int = 64): Unit = {
     val staged = Checkpoints.truncate(delta)
     Par.run(
-      () => staged.write.mode("append").parquet(baseDir),
+      () => GraftSession.write(staged).mode("append").parquet(baseDir),
       () => MaterializedAgg.refresh(spark, statePath, staged, keys,
         valueCol, nBuckets))
     Checkpoints.free(staged)
@@ -100,10 +102,10 @@ object MaintainedMv {
   private def materializeAndRegister(spark: SparkSession, baseDir: String,
       keys: Seq[String], valueCol: String, statePath: String,
       mvPath: String): Unit = {
-    MaterializedAgg.read(spark, statePath, keys)
+    GraftSession.write(MaterializedAgg.read(spark, statePath, keys)
       .select((keys.map(col) :+ col("n") :+ col("total") :+ col("lo") :+
-        col("hi") :+ col("mean")): _*)
-      .write.mode("overwrite").parquet(mvPath)
+        col("hi") :+ col("mean")): _*))
+      .mode("overwrite").parquet(mvPath)
     Mv.registerExisting(viewOf(spark, baseDir, keys, valueCol), mvPath)
   }
 }

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Incrementally-maintained grouped aggregate — materialized-view
   * maintenance for the self-maintainable aggregates (count / sum /
   * min / max; avg derived at read) in the sense of Mumick, Quass &
@@ -26,6 +28,19 @@ import org.apache.spark.sql.functions._
   * (`local_data_ingestion.py:116-130`); this is the incremental form a
   * 100 TB fact table needs instead. */
 object MaterializedAgg {
+
+  /** `df` as the whole table at `path`, partitioned by `partCol`. */
+  private[etl] def writePartitioned(df: DataFrame, partCol: String,
+      path: String): Unit =
+    GraftSession.write(df).mode("overwrite").partitionBy(partCol).parquet(path)
+
+  /** `df` into the `partCol`-partitioned table at `path`, replacing only
+    * the partitions `df` has rows in (dynamic partition overwrite). */
+  private[etl] def replacePartitions(df: DataFrame, partCol: String,
+      path: String): Unit =
+    GraftSession.write(df).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(path)
 
   /** Mergeable partials of `valueCol` per `keys`: `__bucket`, `__cnt`,
     * `__sum`, `__min`, `__max`. One partial-agg shuffle; rows with a
@@ -51,8 +66,7 @@ object MaterializedAgg {
   /** Initialize the state table at `path` from a base frame. */
   def create(df: DataFrame, keys: Seq[String], valueCol: String,
       path: String, nBuckets: Int = 64): Unit =
-    partials(df, keys, valueCol, nBuckets)
-      .write.mode("overwrite").partitionBy("__bucket").parquet(path)
+    writePartitioned(partials(df, keys, valueCol, nBuckets), "__bucket", path)
 
   /** Absorb `delta` into the state at `path`. Cost is bounded by the
     * delta plus the state buckets it touches — the base is never read.
@@ -70,9 +84,7 @@ object MaterializedAgg {
     Checkpoints.free(deltaP)
     // dynamic overwrite: only the touched __bucket= partitions are
     // replaced; untouched buckets' files are never opened or rewritten
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket").parquet(path)
+    replacePartitions(merged, "__bucket", path)
     Checkpoints.free(merged)
   }
 
@@ -98,11 +110,8 @@ object MaterializedAgg {
   def appendBatchPartials(batch: DataFrame, keys: Seq[String],
       valueCol: String, path: String, batchId: Long,
       nBuckets: Int = 64): Unit =
-    partials(batch, keys, valueCol, nBuckets)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(path)
+    replacePartitions(partials(batch, keys, valueCol, nBuckets)
+      .withColumn("__batch", lit(batchId)), "__batch", path)
 
   /** Finalized view over batch-partitioned partials: one hash
     * aggregation across all batches' partial rows (each batch
@@ -149,8 +158,8 @@ object MaterializedDistinct {
 
   def create(df: DataFrame, keys: Seq[String], valueCol: String,
       path: String, nBuckets: Int = 64, lgK: Int = 12): Unit =
-    partials(df, keys, valueCol, nBuckets, lgK)
-      .write.mode("overwrite").partitionBy("__bucket").parquet(path)
+    MaterializedAgg.writePartitioned(partials(df, keys, valueCol, nBuckets, lgK),
+      "__bucket", path)
 
   /** Union `delta`'s sketches into the state at `path`; reads and
     * rewrites only the buckets the delta touches. */
@@ -165,9 +174,7 @@ object MaterializedDistinct {
       .where(col("__bucket").isin(touched: _*))
     val merged = Checkpoints.truncate(merge(state, deltaP, keys, lgK))
     Checkpoints.free(deltaP)
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket").parquet(path)
+    MaterializedAgg.replacePartitions(merged, "__bucket", path)
     Checkpoints.free(merged)
   }
 
@@ -195,11 +202,8 @@ object MaterializedDistinct {
   def appendBatchPartials(batch: DataFrame, keys: Seq[String],
       valueCol: String, path: String, batchId: Long,
       nBuckets: Int = 64, lgK: Int = 12): Unit =
-    partials(batch, keys, valueCol, nBuckets, lgK)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(path)
+    MaterializedAgg.replacePartitions(partials(batch, keys, valueCol, nBuckets, lgK)
+      .withColumn("__batch", lit(batchId)), "__batch", path)
 
   /** Finalized view over batch-partitioned sketches: one union per
     * key across all batches (reads one lgK-bounded sketch per touched

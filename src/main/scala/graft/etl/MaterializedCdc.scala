@@ -39,8 +39,7 @@ object MaterializedCdc {
   def create(log: DataFrame, keyCol: String, orderCols: Seq[String],
       opCol: String, payloadCols: Seq[String], path: String,
       nBuckets: Int = 64): Unit =
-    latest(log, keyCol, orderCols, opCol, payloadCols, nBuckets)
-      .write.mode("overwrite").partitionBy("__bucket").parquet(path)
+    writeCreated(latest(log, keyCol, orderCols, opCol, payloadCols, nBuckets), path)
 
   /** [[create]] split for compositions: the first-slice state as a
     * CHECKPOINTED frame, so the caller can overlap [[writeCreated]]
@@ -55,7 +54,7 @@ object MaterializedCdc {
 
   /** Land a [[createForCompose]] frame as the initial state. */
   def writeCreated(state: DataFrame, path: String): Unit =
-    state.write.mode("overwrite").partitionBy("__bucket").parquet(path)
+    MaterializedAgg.writePartitioned(state, "__bucket", path)
 
   /** The live (tombstone-suppressed) view of an in-memory state
     * frame — what [[read]] computes from disk. */
@@ -117,9 +116,7 @@ object MaterializedCdc {
     * frame ([[MaterializedJoin.applyUpserts]] — see
     * [[graft.streaming.StreamAsBatch.cdcJoinRestarted]]). */
   def writeMerged(merged: DataFrame, path: String): Unit =
-    merged.drop("__touched").write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket").parquet(path)
+    MaterializedAgg.replacePartitions(merged.drop("__touched"), "__bucket", path)
 
   /** Absorb a delta log slice: cost bounded by the delta plus the
     * state buckets it touches; the full key space is never read. */

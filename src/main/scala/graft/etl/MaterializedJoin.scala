@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Incrementally-maintained INNER EQUI-JOIN materialization — the
   * join leg of the maintained-view family ([[MaterializedAgg]] /
   * [[MaterializedDistinct]] / [[MaterializedQuantiles]] /
@@ -58,6 +60,12 @@ object MaterializedJoin {
     df.withColumn("__bucket",
       pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)))
 
+  /** `df` as the `__bucket`-partitioned table at `path`, spread over
+    * `tasks` write tasks by bucket. */
+  private def writeBuckets(df: DataFrame, tasks: Int, path: String): Unit =
+    MaterializedAgg.writePartitioned(df.repartition(tasks, col("__bucket")),
+      "__bucket", path)
+
   private def joinCond(a: DataFrame, b: DataFrame, keysA: Seq[String],
       keysB: Seq[String]): Column =
     keysA.zip(keysB).map { case (ka, kb) => a(ka) === b(kb) }
@@ -80,7 +88,7 @@ object MaterializedJoin {
     new org.apache.hadoop.fs.Path(s"$path/_commits")
 
   private def fs(spark: SparkSession, path: String) =
-    commitsPath(path).getFileSystem(graft.GraftSession.hadoopConf(spark))
+    commitsPath(path).getFileSystem(GraftSession.hadoopConf(spark))
 
   /** Highest committed epoch, -1 if none (also the marker that a
     * path uses the epoch layout at all). */
@@ -115,19 +123,13 @@ object MaterializedJoin {
     // The two side landings are independent — overlapped ([[Par]]);
     // J depends on both and stays after the barrier.
     Par.run(
-      () => bucketed(a, keysA, nBuckets)
-        .repartition(nBuckets, col("__bucket"))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .parquet(s"$path/A/__epoch=0"),
-      () => bucketed(b, keysB, nBuckets)
-        .repartition(nBuckets, col("__bucket"))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .parquet(s"$path/B/__epoch=0"))
-    joined(spark.read.parquet(s"$path/A/__epoch=0"),
-        spark.read.parquet(s"$path/B/__epoch=0"), keysA, keysB)
-      .repartition(nBuckets, col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket")
-      .parquet(s"$path/J/__epoch=0")
+      () => writeBuckets(bucketed(a, keysA, nBuckets), nBuckets,
+        s"$path/A/__epoch=0"),
+      () => writeBuckets(bucketed(b, keysB, nBuckets), nBuckets,
+        s"$path/B/__epoch=0"))
+    writeBuckets(joined(spark.read.parquet(s"$path/A/__epoch=0"),
+        spark.read.parquet(s"$path/B/__epoch=0"), keysA, keysB), nBuckets,
+      s"$path/J/__epoch=0")
     commit(spark, path, 0)
   }
 
@@ -186,17 +188,11 @@ object MaterializedJoin {
     // (J reads only COMMITTED state plus the truncated deltas) —
     // overlapped; only the marker must happen-after all of them
     Par.run(
-      () => newJ.foreach(_.repartition(nBuckets, col("__bucket"))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .parquet(s"$path/J/__epoch=$e")),
+      () => newJ.foreach(writeBuckets(_, nBuckets, s"$path/J/__epoch=$e")),
       () => if (touchedA.nonEmpty)
-        dA.repartition(nBuckets, col("__bucket"))
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(s"$path/A/__epoch=$e"),
+        writeBuckets(dA, nBuckets, s"$path/A/__epoch=$e"),
       () => if (touchedB.nonEmpty)
-        dB.repartition(nBuckets, col("__bucket"))
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(s"$path/B/__epoch=$e"))
+        writeBuckets(dB, nBuckets, s"$path/B/__epoch=$e"))
     commit(spark, path, e) // written last: the refresh IS this marker
     Checkpoints.free(dA); Checkpoints.free(dB)
   }
@@ -242,11 +238,9 @@ object MaterializedJoin {
       () => createSide(b, keysB, path, nBuckets),
       // schema sidecar: lets read()/applyUpserts survive the state
       // where every bucket has been expired by deletes
-      () => j.limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/_schema"),
-      () => j.repartition(math.min(nBuckets, 8), col("__bucket"))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .parquet(s"$path/J"))
+      () => GraftSession.write(j.limit(0).coalesce(1))
+        .mode("overwrite").parquet(s"$path/_schema"),
+      () => writeBuckets(j, math.min(nBuckets, 8), s"$path/J"))
   }
 
   /** Apply one CDC emission batch ([[MaterializedCdc.refreshEmit]]:
@@ -313,9 +307,7 @@ object MaterializedJoin {
       val out = Checkpoints.truncate(
         keep.unionByName(ins)
           .repartition(math.min(nBuckets, 8), col("__bucket")))
-      out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket").parquet(s"$path/J")
+      MaterializedAgg.replacePartitions(out, "__bucket", s"$path/J")
       // dynamic overwrite only replaces partitions PRESENT in the
       // output; a fully-expired bucket must be cleared by hand
       val written = out.select("__bucket").distinct()
@@ -339,9 +331,7 @@ object MaterializedJoin {
     * stream-maintained joins where deltas arrive on one side. */
   def createSide(b: DataFrame, keysB: Seq[String], path: String,
       nBuckets: Int = 64): Unit =
-    bucketed(b, keysB, nBuckets)
-      .repartition(nBuckets, col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(s"$path/B")
+    writeBuckets(bucketed(b, keysB, nBuckets), nBuckets, s"$path/B")
 
   /** Join one micro-batch of the delta side against the standing
     * side's TOUCHED bucket partitions only, landing the result under
@@ -359,14 +349,12 @@ object MaterializedJoin {
     val touched = dA.select("__bucket").distinct()
       .collect().map(_.getLong(0))
     if (touched.nonEmpty)
-      joined(dA,
+      MaterializedAgg.replacePartitions(joined(dA,
           batchA.sparkSession.read.parquet(s"$path/B")
             .where(col("__bucket").isin(touched: _*)), keysA, keysB)
         .withColumn("__batch", lit(batchId))
-        .repartition(math.min(nBuckets, 8), col("__bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(s"$path/J")
+        .repartition(math.min(nBuckets, 8), col("__bucket")), "__batch",
+        s"$path/J")
     Checkpoints.free(dA)
   }
 

@@ -126,8 +126,8 @@ object MaterializedQuantiles {
   def create(df: DataFrame, keys: Seq[String], idCol: String,
       valueCol: String, path: String, k: Int = 256,
       seed: String = "mq", nBuckets: Int = 64): Unit =
-    partials(df, keys, idCol, valueCol, k, seed, nBuckets)
-      .write.mode("overwrite").partitionBy("__bucket").parquet(path)
+    MaterializedAgg.writePartitioned(
+      partials(df, keys, idCol, valueCol, k, seed, nBuckets), "__bucket", path)
 
   /** Absorb `delta`: bottom-k of (state ∪ mink(delta)) per key, only
     * in the buckets the delta touches. `k`/`seed`/`nBuckets` must
@@ -153,9 +153,7 @@ object MaterializedQuantiles {
           col("__row._1").as("__h"), col("__row._2").as("__rid"),
           col("__row._3").as("__v")): _*))
     Checkpoints.free(deltaP)
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket").parquet(path)
+    MaterializedAgg.replacePartitions(merged, "__bucket", path)
     Checkpoints.free(merged)
   }
 
@@ -194,11 +192,9 @@ object MaterializedQuantiles {
   def appendBatchPartials(batch: DataFrame, keys: Seq[String],
       idCol: String, valueCol: String, path: String, batchId: Long,
       k: Int = 256, seed: String = "mq", nBuckets: Int = 64): Unit =
-    partials(batch, keys, idCol, valueCol, k, seed, nBuckets)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(path)
+    MaterializedAgg.replacePartitions(
+      partials(batch, keys, idCol, valueCol, k, seed, nBuckets)
+        .withColumn("__batch", lit(batchId)), "__batch", path)
 
   /** Finalized view over batch-partitioned partials: re-select the
     * global bottom-k per key across batches (≤ k rows per key per

@@ -114,7 +114,7 @@ object Mv {
       require(plan.isInstanceOf[Aggregate],
         "Mv.register expects an Aggregate-rooted query (got " +
           plan.nodeName + ")")
-      df.write.mode("overwrite").parquet(path)
+      graft.GraftSession.write(df).mode("overwrite").parquet(path)
       registry.put((sessionKey(df.sparkSession), fingerprint(plan)),
         Entry(path, rootPathsOf(plan),
           nameShapeOf(plan.asInstanceOf[Aggregate])))

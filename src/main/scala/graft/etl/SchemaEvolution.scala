@@ -76,9 +76,9 @@ object SchemaEvolution {
     * replayed batch id overwrites only its own partition. */
   def appendConformed(batch: DataFrame, target: StructType, root: String,
       batchId: Long, dropExtras: Boolean = false): Unit =
-    conform(batch, target, dropExtras)
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
+    graft.GraftSession.write(conform(batch, target, dropExtras)
+        .withColumn("batch", lit(batchId)))
+      .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch").parquet(root)
 }

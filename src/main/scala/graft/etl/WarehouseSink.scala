@@ -2,24 +2,26 @@ package graft.etl
 
 import org.apache.spark.sql.DataFrame
 
+import graft.GraftSession
+
 /** Warehouse sinks (reference S7/S8:
   * `local_data_ingestion.py:31-49,116-130` — CREATE IF NOT EXISTS +
   * TRUNCATE + INSERT…SELECT, i.e. an idempotent full refresh; and the
   * notebook's CTAS `.ipynb:239-240`).
   *
-  * Spark-first: `write.mode("overwrite")` IS create-if-absent +
+  * Spark-first: a write in mode `overwrite` IS create-if-absent +
   * truncate + insert in one atomic-per-table operation. */
 object WarehouseSink {
 
   /** Idempotent full refresh of a managed catalog table. */
   def overwriteTable(df: DataFrame, table: String): Unit =
-    df.write.mode("overwrite").saveAsTable(table)
+    GraftSession.write(df).mode("overwrite").saveAsTable(table)
 
   /** Idempotent full refresh of a parquet path, partitioned by the given
     * columns (the 100 TB landing form: natural-key partitions prune). */
   def overwritePath(df: DataFrame, path: String,
       partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
+    val w = GraftSession.write(df).mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path)
   }
@@ -36,14 +38,15 @@ object WarehouseSink {
       keys: Seq[String]): Unit = {
     val spark = updates.sparkSession
     if (!spark.catalog.tableExists(table)) {
-      updates.write.saveAsTable(table)
+      GraftSession.write(updates).saveAsTable(table)
     } else {
       val existing = spark.table(table)
       val kept = existing.join(
         updates.select(keys.map(org.apache.spark.sql.functions.col): _*),
         keys, "left_anti")
       val tmp = table + "__upsert_tmp"
-      kept.unionByName(updates).write.mode("overwrite").saveAsTable(tmp)
+      GraftSession.write(kept.unionByName(updates)).mode("overwrite")
+        .saveAsTable(tmp)
       spark.sql(s"DROP TABLE `$table`")
       spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
     }
@@ -61,8 +64,8 @@ object WarehouseSink {
     catch {
       case _: org.apache.spark.sql.AnalysisException =>
         val tmp = table + "__rename_tmp"
-        spark.table(table).withColumnRenamed(from, to)
-          .write.mode("overwrite").saveAsTable(tmp)
+        GraftSession.write(spark.table(table).withColumnRenamed(from, to))
+          .mode("overwrite").saveAsTable(tmp)
         spark.sql(s"DROP TABLE `$table`")
         spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
     }
@@ -76,7 +79,7 @@ object WarehouseSink {
   def overwriteBucketed(df: DataFrame, table: String,
       bucketCols: Seq[String], numBuckets: Int,
       sortCols: Seq[String] = Nil): Unit = {
-    var w = df.write.mode("overwrite")
+    var w = GraftSession.write(df).mode("overwrite")
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
     if (sortCols.nonEmpty) w = w.sortBy(sortCols.head, sortCols.tail: _*)
     w.saveAsTable(table)

@@ -2,6 +2,7 @@ package graft.gates
 
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.gates.Shared.t
 
 /** Graph analytics over the TPC-H tables: PageRank, triangles, BFS
@@ -23,6 +24,14 @@ object GraphGates {
          |  FROM nodes CROSS JOIN nn LEFT JOIN c$i ON c$i.node = nodes.node
          |)""".stripMargin
     }.mkString(", ")
+
+  /** The trade-graph edge list of `dir` as one parquet file, built once
+    * per JVM; the directory it is in. */
+  private def tradeEdges(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.etl.PrebuiltState.getOrCreate(s"tradeEdges|$dir", "trade-edges") { d =>
+      GraftSession.write(graft.ops.Graph.tradeEdges(s, dir).repartition(1))
+        .mode("overwrite").parquet(d)
+    }
 
   val all: Seq[Gate] = Seq(
 
@@ -176,11 +185,7 @@ object GraphGates {
     // the gate body is read-index + iterate. Oracle = q80's verbatim:
     // the persisted edges must serve exactly the from-scratch rank.
     Gate("q271_pagerank_read", (s, dir) => {
-      val path = graft.etl.PrebuiltState.getOrCreate(
-          s"tradeEdges|$dir", "trade-edges") { d =>
-        graft.ops.Graph.tradeEdges(s, dir)
-          .repartition(1).write.mode("overwrite").parquet(d)
-      }
+      val path = tradeEdges(s, dir)
       val nodes = t(s, dir, "nation").select(col("n_nationkey").as("node"))
       graft.ops.Graph.pageRank(nodes, s.read.parquet(path),
           iters = 5, damping = 0.85)
@@ -219,11 +224,7 @@ object GraphGates {
     // fact joins are the family's whole cost; one build serves
     // PageRank, BFS and triangles). Oracle = q98's verbatim.
     Gate("q273_bfs_read", (s, dir) => {
-      val path = graft.etl.PrebuiltState.getOrCreate(
-          s"tradeEdges|$dir", "trade-edges") { d =>
-        graft.ops.Graph.tradeEdges(s, dir)
-          .repartition(1).write.mode("overwrite").parquet(d)
-      }
+      val path = tradeEdges(s, dir)
       graft.ops.Graph.bfsLevels(
           s.read.parquet(path).select("src", "dst"),
           source = 0L, maxHops = 3)
@@ -249,11 +250,7 @@ object GraphGates {
     // Triangle counts from the same persisted edge list — q91's
     // steady-state twin. Oracle = q91's verbatim.
     Gate("q274_triangles_read", (s, dir) => {
-      val path = graft.etl.PrebuiltState.getOrCreate(
-          s"tradeEdges|$dir", "trade-edges") { d =>
-        graft.ops.Graph.tradeEdges(s, dir)
-          .repartition(1).write.mode("overwrite").parquet(d)
-      }
+      val path = tradeEdges(s, dir)
       graft.ops.Graph.triangles(s.read.parquet(path)).orderBy("node")
     },
       // q91's oracle verbatim: the persisted edge list must serve
@@ -289,9 +286,10 @@ object GraphGates {
       val path = graft.etl.PrebuiltState.getOrCreate(
           s"suppCustPairs|$dir", "supp-cust-pairs") { d =>
         val (li, od) = graft.etl.FactBuckets.orderkeyFacts(s, dir)
-        li.join(od, col("l_orderkey") === col("o_orderkey"))
-          .select(col("l_suppkey"), col("o_custkey")).distinct()
-          .coalesce(4).write.mode("overwrite").parquet(d)
+        GraftSession.write(li.join(od, col("l_orderkey") === col("o_orderkey"))
+            .select(col("l_suppkey"), col("o_custkey")).distinct()
+            .coalesce(4))
+          .mode("overwrite").parquet(d)
       }
       s.read.parquet(path)
         .groupBy(col("l_suppkey"))

@@ -2,6 +2,7 @@ package graft.gates
 
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.gates.Shared.t
 
 /** Table lifecycle: maintained aggregates, distincts, quantiles, joins
@@ -215,7 +216,7 @@ object LifecycleGates {
     Gate("q192_compaction", (s, dir) => {
       val docs = t(s, dir, "documents")
       val root = graft.etl.Scratch.dir("compact")
-      docs.repartition(64).write.mode("overwrite").parquet(root)
+      GraftSession.write(docs.repartition(64)).mode("overwrite").parquet(root)
       graft.etl.Layout.compact(s, root, targetBytes = 16L * 1024 * 1024)
       s.read.parquet(root)
         .groupBy(col("source"))
@@ -437,8 +438,9 @@ object LifecycleGates {
       val statePath = graft.etl.Scratch.dir("mmv241state")
       val mvPath = graft.etl.Scratch.dir("mmv241mv")
       val ev = t(s, dir, "events").select("event_type", "value", "user_id")
-      ev.where(col("user_id") % 10 =!= 0).select("event_type", "value")
-        .write.mode("overwrite").parquet(baseDir)
+      GraftSession.write(ev.where(col("user_id") % 10 =!= 0)
+          .select("event_type", "value"))
+        .mode("overwrite").parquet(baseDir)
       graft.etl.MaintainedMv.create(s, baseDir, Seq("event_type"),
         "value", statePath, mvPath, nBuckets = 16)
       graft.etl.MaintainedMv.ingestAndRefresh(s, baseDir,
@@ -462,10 +464,10 @@ object LifecycleGates {
     // aggregate — the values must match the parquet-native oracle.
     Gate("q242_orc_roundtrip", (s, dir) => {
       val path = graft.etl.Scratch.dir("orc242")
-      t(s, dir, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_quantity",
-          "l_extendedprice")
-        .write.mode("overwrite").orc(path)
+      GraftSession.write(t(s, dir, "lineitem")
+          .select("l_orderkey", "l_returnflag", "l_quantity",
+            "l_extendedprice"))
+        .mode("overwrite").orc(path)
       s.read.orc(path)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.etl.Checkpoints
 
 import graft.functions.TextFunctions._
@@ -498,11 +499,11 @@ object Dedup {
     // (callers fence with their own markers), and both legs complete
     // before return exactly as before
     graft.etl.Par.run(
-      () => bandTable(sig, idCol, bands, rowsPerBand)
-        .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands"),
-      () => shingleTable(df, idCol, textCol, n)
-        .select(col(idCol), xxhash64(col("s")).as("sk"), col("n"))
-        .write.mode("overwrite").parquet(s"$path/shingles"))
+      () => GraftSession.write(bandTable(sig, idCol, bands, rowsPerBand))
+        .mode("overwrite").partitionBy("band").parquet(s"$path/bands"),
+      () => GraftSession.write(shingleTable(df, idCol, textCol, n)
+          .select(col(idCol), xxhash64(col("s")).as("sk"), col("n")))
+        .mode("overwrite").parquet(s"$path/shingles"))
   }
 
   /** ADMIT a new batch into a persisted LSH index without rebuilding:
@@ -517,11 +518,11 @@ object Dedup {
       path: String, n: Int = 3, nPerms: Int = 8, bands: Int = 4,
       rowsPerBand: Int = 2): Unit = {
     val sig = minhashSignatures(batch, idCol, textCol, n, nPerms)
-    bandTable(sig, idCol, bands, rowsPerBand)
-      .write.mode("append").partitionBy("band").parquet(s"$path/bands")
-    shingleTable(batch, idCol, textCol, n)
-      .select(col(idCol), xxhash64(col("s")).as("sk"), col("n"))
-      .write.mode("append").parquet(s"$path/shingles")
+    GraftSession.write(bandTable(sig, idCol, bands, rowsPerBand))
+      .mode("append").partitionBy("band").parquet(s"$path/bands")
+    GraftSession.write(shingleTable(batch, idCol, textCol, n)
+        .select(col(idCol), xxhash64(col("s")).as("sk"), col("n")))
+      .mode("append").parquet(s"$path/shingles")
   }
 
   /** Near-dup pairs between a NEW batch and an indexed corpus:

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.functions.TextFunctions.h32
 import graft.functions.VectorFunctions._
 
@@ -175,16 +176,14 @@ object Pq {
   def buildIvfPqIndex(emb: DataFrame, idCol: String, vecCol: String,
       path: String, centroidStride: Int = 32, m: Int = 8,
       ksub: Int = 16): Unit = {
-    Similarity.ivfCentroids(emb, idCol, vecCol, centroidStride)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+    GraftSession.write(Similarity.ivfCentroids(emb, idCol, vecCol, centroidStride))
+      .mode("overwrite").parquet(s"$path/centroids")
     val books = pqCodebooks(emb, idCol, vecCol, m, ksub)
-    books.write.mode("overwrite").parquet(s"$path/codebooks")
+    GraftSession.write(books).mode("overwrite").parquet(s"$path/codebooks")
     val cells = Similarity.assignCells(emb, idCol, vecCol, centroidStride)
       .select(col("target_id").as("id"), col("cent_id"))
-    pqEncode(emb, idCol, vecCol, books, m)
-      .join(cells, Seq("id"))
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$path/codes")
+    GraftSession.write(pqEncode(emb, idCol, vecCol, books, m).join(cells, Seq("id")))
+      .mode("overwrite").partitionBy("cent_id").parquet(s"$path/codes")
   }
 
   /** Append a new vector batch to a persisted IVF-PQ index: encode
@@ -201,10 +200,8 @@ object Pq {
     val books = spark.read.parquet(s"$path/codebooks")
     val cells = Similarity.assignTo(batch, idCol, vecCol, coarse)
       .select(col("target_id").as("id"), col("cent_id"))
-    pqEncode(batch, idCol, vecCol, books, m)
-      .join(cells, Seq("id"))
-      .write.mode("append").partitionBy("cent_id")
-      .parquet(s"$path/codes")
+    GraftSession.write(pqEncode(batch, idCol, vecCol, books, m).join(cells, Seq("id")))
+      .mode("append").partitionBy("cent_id").parquet(s"$path/codes")
   }
 
   /** ADC top-k over a persisted IVF-PQ index. Queries probe their

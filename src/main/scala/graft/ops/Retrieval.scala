@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.functions.TextFunctions.tokens
 
 /** Query-driven retrieval rankers beyond BM25 ([[Bm25]]) and their
@@ -245,24 +246,23 @@ object Retrieval {
     val spark = docs.sparkSession
     val np = if (nPartitions > 0) nPartitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    Bm25.postings(docs, idCol, textCol)
-      .repartitionByRange(np, col("token")).sortWithinPartitions("token")
-      .write.mode("overwrite").parquet(s"$dir/postings")
+    def byToken(df: DataFrame, name: String): Unit =
+      GraftSession.write(df.repartitionByRange(np, col("token"))
+        .sortWithinPartitions("token")).mode("overwrite").parquet(s"$dir/$name")
+    byToken(Bm25.postings(docs, idCol, textCol), "postings")
     val post = spark.read.parquet(s"$dir/postings")
-    post.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      .repartitionByRange(np, col("token")).sortWithinPartitions("token")
-      .write.mode("overwrite").parquet(s"$dir/df")
-    post.groupBy(col(idCol)).agg(max(col("dl")).as("__dl"))
-      .agg(count(lit(1)).as("n"), avg(col("__dl")).as("avgdl"))
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    byToken(post.groupBy(col("token")).agg(count(lit(1)).as("df")), "df")
+    GraftSession.write(post.groupBy(col(idCol)).agg(max(col("dl")).as("__dl"))
+        .agg(count(lit(1)).as("n"), avg(col("__dl")).as("avgdl")))
+      .mode("overwrite").parquet(s"$dir/stats")
     val dfA = spark.read.parquet(s"$dir/df")
     val stats = spark.read.parquet(s"$dir/stats")
-    post.join(dfA, "token").crossJoin(broadcast(stats))
-      .withColumn("w", col("tf") * log(col("n").cast("double") / col("df")))
-      .where(col("w") > 0).groupBy(col(idCol))
-      .agg(sqrt(sum(col("w") * col("w"))).as("dnorm"))
-      .coalesce(np)
-      .write.mode("overwrite").parquet(s"$dir/norms")
+    GraftSession.write(post.join(dfA, "token").crossJoin(broadcast(stats))
+        .withColumn("w", col("tf") * log(col("n").cast("double") / col("df")))
+        .where(col("w") > 0).groupBy(col(idCol))
+        .agg(sqrt(sum(col("w") * col("w"))).as("dnorm"))
+        .coalesce(np))
+      .mode("overwrite").parquet(s"$dir/norms")
   }
 
   /** [[hybridTopKFromPostings]] served from a [[writeHybridIndex]]

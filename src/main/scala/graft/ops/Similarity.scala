@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.etl.Checkpoints
 
 import graft.functions.VectorFunctions._
@@ -488,11 +489,10 @@ object Similarity {
     * batch (what [[ivfTopK]] does inline). */
   def buildIvfIndex(emb: DataFrame, idCol: String, vecCol: String,
       path: String, centroidStride: Int = 32): Unit = {
-    ivfCentroids(emb, idCol, vecCol, centroidStride)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    assignCells(emb, idCol, vecCol, centroidStride)
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$path/corpus")
+    GraftSession.write(ivfCentroids(emb, idCol, vecCol, centroidStride))
+      .mode("overwrite").parquet(s"$path/centroids")
+    GraftSession.write(assignCells(emb, idCol, vecCol, centroidStride))
+      .mode("overwrite").partitionBy("cent_id").parquet(s"$path/corpus")
   }
 
   /** Top-k over a persisted IVF index. The probed cell ids (a bounded

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
+import graft.GraftSession
 import graft.ops.{CorpusClean, Dedup}
 
 /** The CONTINUOUS-INGEST loop of the training-corpus pipeline, closed
@@ -91,10 +92,10 @@ object CorpusIngest {
         Seq("ingest-stage", "ingest-corpus", "ingest-index", "ingest-ckpt"),
         partitions = 8,
         waves = Seq(
-          r => docs(r.s).where(col(idCol) % 2 === 0)
-            .write.mode("overwrite").parquet(r.dirs.head),
-          r => docs(r.s).where(col(idCol) % 2 =!= 0)
-            .write.mode("append").parquet(r.dirs.head))) { r =>
+          r => GraftSession.write(docs(r.s).where(col(idCol) % 2 === 0))
+            .mode("overwrite").parquet(r.dirs.head),
+          r => GraftSession.write(docs(r.s).where(col(idCol) % 2 =!= 0))
+            .mode("append").parquet(r.dirs.head))) { r =>
       val Seq(stage, corpus, index, ckpt) = r.dirs
       start(r.s.readStream.schema(docs(r.s).schema).parquet(stage),
         idCol, textCol, corpus, index, ckpt, cfg)
@@ -112,7 +113,7 @@ object CorpusIngest {
       cfg: CorpusClean.Config = CorpusClean.Config()): Long = {
     val spark = batch.sparkSession
     val fs = new Path(corpusRoot)
-      .getFileSystem(graft.GraftSession.hadoopConf(spark))
+      .getFileSystem(GraftSession.hadoopConf(spark))
     val corpusDir = s"$corpusRoot/batch_id=$batchId"
     val myMarker = new Path(indexPath, s"_batch_$batchId")
     if (fs.exists(new Path(corpusDir, "_SUCCESS")) && fs.exists(myMarker))
@@ -171,7 +172,7 @@ object CorpusIngest {
           fs.createNewFile(myMarker)
           ()
         },
-        () => survivors.write.mode("overwrite").parquet(corpusDir))
+        () => GraftSession.write(survivors).mode("overwrite").parquet(corpusDir))
       admitted
     } finally survivors.unpersist()
   }

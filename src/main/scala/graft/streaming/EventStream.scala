@@ -243,7 +243,7 @@ object EventStream {
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       graft.GraftSession.hadoopConf(batch.sparkSession))
     val committed = fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
-    if (!committed) batch.write.mode("overwrite").parquet(dir)
+    if (!committed) graft.GraftSession.write(batch).mode("overwrite").parquet(dir)
     !committed
   }
 }

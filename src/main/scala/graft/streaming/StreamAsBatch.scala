@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.GraftSession
 import graft.streaming.BoundedStream.Run
 
 /** Run the Structured Streaming windowed aggregation over a bounded
@@ -52,7 +53,7 @@ object StreamAsBatch {
       written = counts.schema
       counts.writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(sink)
+          GraftSession.write(batch).mode("overwrite").parquet(sink)
         }
         .option("checkpointLocation", ckpt)
         .start()
@@ -403,10 +404,10 @@ object StreamAsBatch {
             .head().getLong(0)
           val h1 = graft.etl.Scratch.pinnedDir("halves-1")
           val h2 = graft.etl.Scratch.pinnedDir("halves-2")
-          all.where(unix_micros(col("ts")) <= cut)
-            .write.mode("overwrite").parquet(h1)
-          all.where(unix_micros(col("ts")) > cut)
-            .write.mode("overwrite").parquet(h2)
+          GraftSession.write(all.where(unix_micros(col("ts")) <= cut))
+            .mode("overwrite").parquet(h1)
+          GraftSession.write(all.where(unix_micros(col("ts")) > cut))
+            .mode("overwrite").parquet(h2)
           Seq(h1, h2)
         }
       })

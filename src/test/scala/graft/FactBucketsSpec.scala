@@ -48,6 +48,21 @@ class FactBucketsSpec extends SparkSpec {
       s"join does not scan the bucketed layout:\n$plan")
   }
 
+  test("a failed bucketed build fails the caller instead of falling back") {
+    // lineitem as a directory: the real file, then a file that is not
+    // parquet. The schema comes from the first, so the projections plan;
+    // the bucketed build's scan fails on the second.
+    val copy = java.nio.file.Files.createTempDirectory("fact-buckets-bad")
+    val li = java.nio.file.Files.createDirectory(copy.resolve("lineitem.parquet"))
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/lineitem.parquet"),
+      li.resolve("a.parquet"))
+    java.nio.file.Files.write(li.resolve("b.parquet"), "not parquet".getBytes)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/orders.parquet"),
+      copy.resolve("orders.parquet"))
+    try intercept[Exception](graft.etl.FactBuckets.orderkeyFacts(spark, copy.toString))
+    finally graft.etl.Scratch.remove(copy.toString)
+  }
+
   test("q238 over the bucketed layout matches the raw plan's rows") {
     val bucketed = SparkEntry.queries("q238_degree_dist")(spark, dir)
       .collect().map(_.toSeq)

@@ -95,6 +95,28 @@ class GraftSessionSpec extends SparkSpec {
     assert(hits.isEmpty)
   }
 
+  test("src/main writes through GraftSession.write") {
+    // a member `.write` not called with arguments (java.nio's
+    // `Files.write(...)` is), also across a line break; `.writeStream` is
+    // not a match. Split so this spec is not itself a match for a grep.
+    val write = ("""\.\s*""" + "write" + """\b(?!\s*\()""").r
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(p => root.relativize(p).toString == "graft/GraftSession.scala")
+      .flatMap { p =>
+        val code = Files.readAllLines(p).asScala.map { line =>
+          if (Seq("*", "/*", "//").exists(line.trim.startsWith)) "" else line
+        }.mkString("\n")
+        write.findAllMatchIn(code).map { m =>
+          val line = code.take(m.start).count(_ == '\n') + 1
+          s"${root.relativize(p)}:$line"
+        }
+      }.toSeq.sorted
+    assert(hits.isEmpty)
+  }
+
   test("shuffle partitions follow the master's cores") {
     assert(GraftSession.partitions("local[4]") == 4)
     assert(GraftSession.partitions("local-cluster[2,4,2048]") == 8)

@@ -8,7 +8,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 
-import graft.etl.LocalFs
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+
+import graft.etl.{Layout, LocalFs, MaterializedAgg, WarehouseSink}
 import graft.streaming.WarmRuns
 
 /** graft's `file://` file system sets modes by syscall: an engine
@@ -64,6 +67,59 @@ class LocalFsSpec extends SparkSpec {
       finally WarmRuns.enabled = was
     }
     assert(starts.isEmpty, starts.mkString("\n"))
+  }
+
+  /** `body` on a new session of `spark` while the context's Hadoop conf
+    * lacks the storage keys: a session graft did not build, as a user's
+    * or the perfbench harness's root session is. The keys are back
+    * afterwards. */
+  private def onBareSession[T](body: SparkSession => T): T = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = GraftSession.StorageConfs.map(_._1).filter(k => hc.get(k) != null)
+    val saved = keys.map(k => k -> hc.get(k))
+    try {
+      keys.foreach(hc.unset)
+      val bare = spark.newSession()
+      val fs = new Path("file:///").getFileSystem(bare.sessionState.newHadoopConf())
+      assert(!fs.isInstanceOf[LocalFs], "the bare session resolves the stock file system")
+      body(bare)
+    } finally saved.foreach { case (k, v) => hc.set(k, v) }
+  }
+
+  private def facts(s: SparkSession): DataFrame =
+    s.range(0, 2000).select(col("id"), (col("id") % 7).as("k"),
+      (col("id") * 3).as("v"))
+
+  test("graft's writes start no process on a session graft did not build") {
+    val root = Files.createTempDirectory("localfs-bare").toString
+    val starts = onBareSession { bare =>
+      val df = facts(bare)
+      processStarts {
+        Layout.writeZoneMapped(df.where(col("id") < 1000), s"$root/zm", "id", 4)
+        Layout.appendZoneMapped(df.where(col("id") >= 1000), s"$root/zm", "id", 2)
+        assert(Layout.readZonePruned(bare, s"$root/zm", lit(1500L), lit(1600L))
+          .where(col("id").between(1500, 1600)).count() == 101)
+        MaterializedAgg.create(df, Seq("k"), "v", s"$root/agg", nBuckets = 4)
+        WarehouseSink.overwriteTable(df, "localfs_bare_sink")
+      }
+    }
+    assert(starts.isEmpty, starts.mkString("\n"))
+  }
+
+  test("graft's partitioned and table writes read back as a plain write's rows") {
+    val root = Files.createTempDirectory("localfs-roundtrip").toString
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val (agg, table) = onBareSession { bare =>
+      val df = facts(bare)
+      MaterializedAgg.create(df, Seq("k"), "v", s"$root/agg", nBuckets = 4)
+      WarehouseSink.overwriteTable(df, "localfs_roundtrip_graft")
+      (rows(spark.read.parquet(s"$root/agg")), rows(spark.table("localfs_roundtrip_graft")))
+    }
+    MaterializedAgg.partials(facts(spark), Seq("k"), "v", 4)
+      .write.mode("overwrite").partitionBy("__bucket").parquet(s"$root/agg-plain")
+    facts(spark).write.mode("overwrite").saveAsTable("localfs_roundtrip_plain")
+    assert(agg.nonEmpty && agg == rows(spark.read.parquet(s"$root/agg-plain")))
+    assert(table.size == 2000 && table == rows(spark.table("localfs_roundtrip_plain")))
   }
 
   /** Relative path -> `st_mode` permission bits (sticky included) of
